@@ -1,8 +1,11 @@
 """Vector math — JVM expression path + Arrow/Pandas vectorized path.
 
-The JVM path (`cosine_expr`) folds with `zip_with`/`aggregate`: exact,
-deterministic summation order (matches the DuckDB oracle), but Spark runs
-higher-order lambdas interpreted — fine at 64 dims, linear cost in width.
+The JVM path (`dot_expr`, `cosine_expr`, `unit_embeddings`) folds with
+`zip_with`/`aggregate`: exact, deterministic summation order (matches the
+DuckDB oracle), but Spark runs higher-order lambdas interpreted — fine at
+64 dims, linear cost in width. `dot_expr` is the package's one JVM dot
+fold; `seq_dot_rows`/`seq_dot_cross` below are its bit-identical numpy
+twins.
 
 The Pandas-UDF path (`cosine_pandas_udf`) ships both columns through Arrow
 and does one numpy matmul per batch — the wide-vector (≥ 512-dim) choice:
@@ -17,18 +20,63 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from australian_company_etl_spark.functions.partitioning import spread_if_narrow
+
+
+def dot_expr(a: Column, b: Column) -> Column:
+    """JVM dot product: one left-to-right fold over double products —
+    the same order as DuckDB's ``list_dot_product`` and ``seq_dot_*``."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
 
 def cosine_expr(a: Column, b: Column) -> Column:
     """JVM cosine: deterministic sequential fold (oracle-parity path)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
+    return dot_expr(a, b) / (na * nb)
+
+
+def unit_embeddings(emb: DataFrame) -> DataFrame:
+    """(vec_id, label, embedding) → (vec_id, label, e): every vector
+    L2-normalized ONCE per row (O(N·dim)), so each pair score downstream
+    is a single ``dot_expr`` (cosine) instead of a dot plus two norms.
+
+    The norm is a materialized column FIRST — referencing the fold inside
+    the transform lambda would re-evaluate it per element (O(dim²)/row).
+    The per-row folds run interpreted, so a narrow scan (a tiny file reads
+    as ONE partition) is spread across cores first.
+
+    ZERO-NORM POLICY: a zero vector has no direction, so ``e`` is NULL —
+    every cosine against it is NULL, it never crosses a similarity
+    threshold, and rankings place it after every real score in both
+    engines (Spark DESC and DuckDB's default are both NULLS LAST). Without
+    the guard Spark ANSI raises DIVIDE_BY_ZERO on x/0 while DuckDB's IEEE
+    division yields NaN. NON-FINITE POLICY: a NaN or ±inf component (or a
+    norm that overflows to +inf) makes ``nrm`` NaN or +inf. Spark orders
+    NaN above every number, so ``nrm > 0`` would hold and the NaN vector
+    would flow on into top-k ranks, where it silently displaces real
+    neighbors — such a row raises instead, naming its vec_id."""
+    d = spread_if_narrow(emb, "vec_id").select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e0")
+    ).withColumn("nrm", F.sqrt(dot_expr(F.col("e0"), F.col("e0"))))
+    nrm = F.col("nrm")
+    return d.select(
+        "vec_id",
+        "label",
+        F.when(
+            F.isnan(nrm) | (nrm == float("inf")),
+            F.raise_error(
+                F.format_string("non-finite embedding norm at vec_id %d", F.col("vec_id"))
+            ),
+        )
+        .when(nrm > 0, F.transform("e0", lambda x: x / nrm))
+        .alias("e"),
+    )
 
 
 @pandas_udf(DoubleType())

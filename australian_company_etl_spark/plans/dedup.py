@@ -39,6 +39,7 @@ from australian_company_etl_spark.functions.textfns import (
     tokens_all_spark,
     tokens_all_sql,
 )
+from australian_company_etl_spark.functions.vectors import dot_expr, unit_embeddings
 from australian_company_etl_spark.operators.cache import persist_tracked
 from australian_company_etl_spark.sources.registry import load_tables
 
@@ -515,34 +516,15 @@ WHERE round({jac}, 4) >= {JACCARD_T}
 # ── F5 embedding cosine near-dup ────────────────────────────────────────────
 
 
-def _dot_spark(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5 — label-blocked embedding near-dup pairs, cosine ≥ 0.25.
 
-    Vectors are L2-normalized once per row so the per-pair score is a
-    single dot product (see plans/similarity.py for the parity argument)."""
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    # spread the interpreted per-row folds (tiny file = one scan partition)
-    emb = spread_if_narrow(emb, "vec_id")
-    e = F.col("embedding").cast("array<double>")
-    d = emb.select("vec_id", "label", e.alias("e0")).withColumn(
-        "nrm", F.sqrt(_dot_spark(F.col("e0"), F.col("e0")))
-    )
-    # zero-norm → NULL normalized vector (no direction): cosines against it
-    # are NULL and never cross the threshold — see plans/similarity.py
-    # _base for the full policy (ANSI DIVIDE_BY_ZERO vs IEEE NaN otherwise)
-    base = d.select(
-        "vec_id",
-        "label",
-        F.when(
-            F.col("nrm") > 0, F.transform("e0", lambda x: x / F.col("nrm"))
-        ).alias("e"),
-    )
+    Vectors are L2-normalized once per row (``unit_embeddings``, with its
+    zero-norm-to-NULL and non-finite-raises policies) so the per-pair
+    score is a single dot product."""
+    base = unit_embeddings(load_tables(spark, sf_dir, ["embeddings"])["embeddings"])
     a, b = base.alias("a"), base.alias("b")
-    cos = _dot_spark(F.col("a.e"), F.col("b.e"))
+    cos = dot_expr(F.col("a.e"), F.col("b.e"))
     # r13: evaluate-once generator barrier for the interpreted 64-dim fold
     # (the τ filter used to collapse into the join condition — the r12 plan
     # dump shows the fold in the condition AND the projection, 2-3
@@ -1612,7 +1594,8 @@ def dedup_setsim_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         # projection). The single-use form pays exactly one intersect on
         # the hot path. Interleaved sf10 A/B: 35.5 → 32.6 s (and a
         # generator-barrier variant measured equal — the algebra needs no
-        # plan hack; scripts/verify_ab_r13.py).
+        # plan hack; scripts/verify_ab_r13.py at commit dabd8f8, numbers in
+        # OPTIMIZATION_r13.md).
         .filter(
             (SETSIM_NUM + SETSIM_DEN) * inter
             >= SETSIM_NUM * (F.col("na") + F.col("nb"))

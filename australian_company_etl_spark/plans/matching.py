@@ -72,7 +72,8 @@ def _multi_score_col(a: str, b: str):
     of materializing ~90M Python string objects (15M pairs × 6 string
     cols) dwarfs the DP saving, and the token-set string building stays
     JVM-side either way, capping the theoretical win at ~1.25×. The
-    kernel + A/B live in scripts/lev_arrow_ab_r13.py; rapidfuzz (the
+    kernel + A/B are scripts/lev_arrow_ab_r13.py at commit dabd8f8 (the
+    numbers are in OPTIMIZATION_r13.md); rapidfuzz (the
     VERDICT r12 item-6 suggestion) is not installed in this environment."""
     t0, t1, t2 = token_set_strings_spark(F.col(f"{a}_tk"), F.col(f"{b}_tk"))
     return F.greatest(

@@ -1,22 +1,41 @@
 """Group G — similarity search over the embedding column.
 
-- G1 `ann_brute_topk` — brute-force cosine top-k per query vector: the
-  correctness baseline. Queries (a tiny set) are broadcast; one pass over
-  the corpus, per-query row_number top-k.
-- G2 `ann_lsh_topk`   — random-hyperplane LSH: 8 deterministic md5-seeded
-  planes → 8-bit sign bucket → in-bucket top-k. The scale path: candidate
-  set shrinks ~2^P per query.
-- G3 `ann_ivf_topk`   — IVF: coarse quantizer = every 50th vector as a
-  centroid (deterministic, data-derived); assign vectors to their nearest
-  cell, probe the query's 2 nearest cells.
+Exact and quantized paths: G1 `ann_brute_topk` (brute-force cosine top-k,
+the correctness baseline), G3 `ann_ivf_topk` (IVF coarse cells), G4
+`cluster_kmeans_embed`, G5 `ann_pq_topk` (product quantization), G6
+`dedup_semantic_kmeans`, G7 `embed_random_projection`, G9
+`embed_top_eigenvector`, and G10 `ann_recall_report`, which measures every
+approximate path against G1.
+
+The sign-LSH family is ONE plan configured by ``(planes, n_probes)``.
+md5-seeded hyperplanes give each vector a sign-bit bucket key; a vector's
+candidates are the vectors whose bucket equals one of its 1 + n_probes
+probe keys (its own key, then its n_probes least-confident Hamming-1
+flips). ``n_probes=0`` is bare LSH; ``n_probes=len(planes)`` is full
+Hamming-1 multiprobe. One key generator (`_lsh_keys`) computes the keys and
+two join shapes consume them:
+
+- the QUERY join (`_lsh_query_pairs`): the 10-row query set's probe keys
+  are broadcast and equi-joined on the corpus bucket — G2 `ann_lsh_topk`
+  (8 planes, 0 probes), G11 `ann_lsh_multiprobe` (8 planes, all flips),
+  the 3-table OR'd `ann_lsh_multitable_topk` (one join per table,
+  unioned) and `ann_lsh_topk_adaptive`, all through
+  `ann_lsh_topk_probed`;
+- the GRAPH join (`knn_graph_lsh_probed`): every vertex's probe keys are
+  cogrouped with the corpus buckets and scored per bucket in an Arrow
+  kernel — G8 `knn_graph_lsh` (8 planes, 0 probes) and
+  `knn_graph_lsh_adaptive`.
+
+The adaptive defaults use ``(corpus_adaptive_planes,
+adaptive_probe_budget)``; `knn_candidate_stats` and `lsh_recall` measure
+the cost and recall of any configuration.
 
 Scores are computed in double and rounded to 6 dp BEFORE ranking, with
 vec_id as tie-break, so Spark and DuckDB rank identically.
 
 Scale: centroids/planes/queries are broadcast dims; the corpus is never
-replicated. G2/G3 shuffle once on the bucket/cell key; at 100 TB per-cell
-top-k is the map-side-reducible pattern (partial top-k per partition via
-AQE-coalesced window partitions).
+replicated. The LSH and IVF paths shuffle once on the bucket/cell key, so
+candidate cost is Σ|bucket|² (or Σ|cell|), never N².
 """
 
 from __future__ import annotations
@@ -29,7 +48,11 @@ from pyspark.sql import functions as F
 
 from australian_company_etl_spark.functions.exactmath import D38 as _PI_D38
 from australian_company_etl_spark.functions.partitioning import spread_if_narrow
-from australian_company_etl_spark.functions.vectors import seq_dot_cross
+from australian_company_etl_spark.functions.vectors import (
+    dot_expr,
+    seq_dot_cross,
+    unit_embeddings,
+)
 from australian_company_etl_spark.functions.textfns import phash_sql
 from australian_company_etl_spark.sources.registry import load_tables
 
@@ -68,19 +91,10 @@ PLANE_TABLES = [[_plane(p, t) for p in range(N_PLANES)] for t in range(N_TABLES)
 
 
 # ── cosine, both dialects (double, sequential fold) ─────────────────────────
-# Vectors are L2-normalized ONCE per row (O(N·dim)) so every pair score is a
-# single dot product (O(pairs·dim)) instead of dot + two norms — 3x less
-# per-pair work, and Spark's sequential fold matches DuckDB's list ops
-# bit-for-bit because both evaluate left-to-right on the same doubles.
-
-
-def _dot_spark(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _cos_spark(a, b):
-    """Dot of pre-normalized vectors == cosine."""
-    return _dot_spark(a, b)
+# Vectors are L2-normalized ONCE per row (vectors.unit_embeddings) so every
+# pair score is a single dot_expr (O(pairs·dim)) instead of dot + two norms
+# — 3x less per-pair work, and Spark's sequential fold matches DuckDB's list
+# ops bit-for-bit because both evaluate left-to-right on the same doubles.
 
 
 def _cos_sql(a: str, b: str) -> str:
@@ -88,30 +102,8 @@ def _cos_sql(a: str, b: str) -> str:
 
 
 def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    # per-row 64-dim folds run interpreted — spread across cores (tiny file
-    # scans as ONE partition; no-op posture on a real many-file dataset)
-    emb = spread_if_narrow(emb, "vec_id")
-    e = F.col("embedding").cast("array<double>")
-    # norm as a materialized column FIRST — referencing the aggregate inside
-    # the transform lambda would re-evaluate it per element (O(dim²)/row).
-    # ZERO-NORM POLICY (round-10 extreme_vectors regime): a zero vector has
-    # no direction, so its normalized form is NULL — every cosine against
-    # it is NULL, it never crosses a similarity threshold, and rankings
-    # place it after every real score in BOTH engines (Spark DESC and
-    # DuckDB's default are both NULLS LAST). Without the guard Spark ANSI
-    # raises DIVIDE_BY_ZERO on x/0 while DuckDB's IEEE division produces
-    # NaN — an engine crash vs silent NaNs, the worst possible pair.
-    d = emb.select("vec_id", "label", e.alias("e0")).withColumn(
-        "nrm", F.sqrt(_dot_spark(F.col("e0"), F.col("e0")))
-    )
-    return d.select(
-        "vec_id",
-        "label",
-        F.when(
-            F.col("nrm") > 0, F.transform("e0", lambda x: x / F.col("nrm"))
-        ).alias("e"),
-    )
+    """(vec_id, label, e): the normalized embedding table."""
+    return unit_embeddings(load_tables(spark, sf_dir, ["embeddings"])["embeddings"])
 
 
 _BASE_SQL = """base AS (
@@ -153,7 +145,7 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = base.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
         "q_id",
         F.col("vec_id").alias("n_id"),
-        F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
+        F.round(dot_expr(F.col("qe"), F.col("e")), 6).alias("score"),
     )
     return _topk(pairs)
 
@@ -169,18 +161,14 @@ scored AS (
 """
 
 
-# ── G2 random-hyperplane LSH ────────────────────────────────────────────────
-
-
-def _bucket_spark(e, planes: list[list[float]] | None = None):
-    bucket = F.lit(0)
-    for p, plane in enumerate(planes if planes is not None else PLANES):
-        lits = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(e, lits, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket.cast("int")
+# ── the sign-LSH family: one key generator, two join shapes ─────────────────
+# A configuration is (planes, n_probes). A probe flips one of the n_probes
+# LEAST-CONFIDENT sign bits (smallest |dot|, plane index breaking exact
+# ties) — query-directed multiprobe (Lv et al., VLDB'07): a near neighbor
+# that lands one bucket away almost always differs on a plane the vector
+# sits close to. A row's probe keys are distinct, so a candidate matches
+# it at most once and no pair dedup is needed; n_probes = len(planes) is
+# exactly the full Hamming-1 probe set.
 
 
 def _bucket_sql(e: str, planes: list[list[float]] | None = None) -> str:
@@ -191,45 +179,147 @@ def _bucket_sql(e: str, planes: list[list[float]] | None = None) -> str:
     return "(" + " + ".join(terms) + ")::INT"
 
 
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G2 — sign-LSH bucketed top-k (candidates share the query's bucket).
-    Registry entry = the frozen 8-plane parity twin; the library default
-    for a growing corpus is ``ann_lsh_topk_adaptive`` (same plan, plane
-    count from ``adaptive_n_planes``)."""
-    return ann_lsh_topk_planes(spark, sf_dir, planes=PLANES)
-
-
-def ann_lsh_topk_planes(
-    spark: SparkSession, sf_dir: str, planes: list[list[float]] | None = None
-) -> DataFrame:
-    """G2 with a parameterized plane set — the scale lever shared with G8
-    (more planes → smaller buckets → bounded per-query candidate sets)."""
-    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), planes))
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("bucket").alias("qb")
+def _plane_dots(e, planes: list[list[float]]):
+    """array<double> of the per-plane dots — ONE O(planes·dim) fold pass."""
+    return F.array(
+        *[dot_expr(e, F.array(*[F.lit(float(x)) for x in plane])) for plane in planes]
     )
-    pairs = base.join(
-        F.broadcast(q), (F.col("bucket") == F.col("qb")) & (F.col("vec_id") != F.col("q_id"))
+
+
+def _lsh_keys(
+    base: DataFrame, planes: list[list[float]], n_probes: int, persist: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """The one sign-LSH key generator: (vec_id, e, …) → ``(own, probes)``,
+    both (vec_id, e, bucket). ``own`` holds each vector once with its own
+    key (bit p set iff the dot with plane p is > 0); ``probes`` holds it
+    once per probe key — its own key and its n_probes least-confident
+    flips. At n_probes=0, ``probes`` IS ``own``: no explode.
+
+    Each row pays its plane folds ONCE. The dots are a materialized column
+    that the key and the margins read by element (CollapseProject keeps an
+    expensive alias referenced more than once, SPARK-36718), and the probe
+    lambda references ``bucket`` as an attribute: an inline key expression
+    there re-evaluated all its folds per probe element (the r13 profile
+    measured ~6 fold-passes per row, ~180 exec-s at sf10). The explode
+    takes an expression, not a key-array attribute: over an attribute,
+    InferFiltersFromGenerate adds a ``size(keys) > 0`` filter that
+    predicate pushdown inlines down to the scan — every fold again, the
+    norm fold once per element inside the normalize lambda. ``persist``
+    caches the dotted frame, so a caller reading both outputs (the probed
+    graph's two join sides) scans, normalizes and folds once."""
+    dotted = base.select("vec_id", "e", _plane_dots(F.col("e"), planes).alias("ds"))
+    if persist:
+        from australian_company_etl_spark.operators.cache import persist_tracked
+
+        dotted = persist_tracked(dotted)
+    ds = [F.element_at("ds", p + 1) for p in range(len(planes))]
+    bucket = None
+    for p, d in enumerate(ds):
+        term = F.when(d > 0, F.lit(1 << p)).otherwise(F.lit(0))
+        bucket = term if bucket is None else bucket + term
+    keyed = dotted.withColumn("bucket", bucket.cast("int"))
+    own = keyed.select("vec_id", "e", "bucket")
+    if n_probes <= 0:
+        return own, own
+    margins = F.array_sort(
+        F.array(*[F.struct(F.abs(d).alias("m"), F.lit(1 << p).alias("bit")) for p, d in enumerate(ds)])
+    )
+    flips = F.transform(F.slice(margins, 1, n_probes), lambda s: F.col("bucket").bitwiseXOR(s["bit"]))
+    keys = F.concat(F.array("bucket"), flips)
+    return own, keyed.select("vec_id", "e", F.explode(keys).alias("bucket"))
+
+
+def _lsh_query_pairs(base: DataFrame, planes: list[list[float]], n_probes: int) -> DataFrame:
+    """The QUERY join shape: (q_id, n_id, score) candidates of the query
+    set. Its probe keys (|queries|·(1 + n_probes) rows) are broadcast and
+    equi-joined on the corpus bucket — cogrouping would shuffle the whole
+    corpus for a 10-row query set."""
+    own, probes = _lsh_keys(base, planes, n_probes)
+    q = probes.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("bucket").alias("pb")
+    )
+    return own.join(
+        F.broadcast(q), (F.col("bucket") == F.col("pb")) & (F.col("vec_id") != F.col("q_id"))
     ).select(
         "q_id",
         F.col("vec_id").alias("n_id"),
-        F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
+        F.round(dot_expr(F.col("qe"), F.col("e")), 6).alias("score"),
     )
-    return _topk(pairs)
 
 
-def ann_lsh_topk_adaptive(
-    spark: SparkSession, sf_dir: str, target_bucket_size: int | None = None
+def ann_lsh_topk_probed(
+    spark: SparkSession,
+    sf_dir: str,
+    planes: list[list[float]] | None = None,
+    n_probes: int = 0,
 ) -> DataFrame:
+    """G2 at any ``(planes, n_probes)`` configuration: each query's top-k
+    among the vectors in its own bucket and its n_probes least-confident
+    Hamming-1 buckets. More planes → smaller buckets → bounded per-query
+    candidate sets; probes buy back the recall the planes cost."""
+    plist = PLANES if planes is None else planes
+    return _topk(_lsh_query_pairs(_base(spark, sf_dir), plist, n_probes))
+
+
+def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G2 — sign-LSH bucketed top-k (candidates share the query's bucket).
+    Registry entry = the frozen 8-plane parity twin; the library default
+    for a growing corpus is ``ann_lsh_topk_adaptive``."""
+    return ann_lsh_topk_probed(spark, sf_dir, PLANES, 0)
+
+
+def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G11 — multi-probe sign-LSH: each query probes its own bucket AND
+    every bucket at Hamming distance 1 (flip one of the 8 sign bits) —
+    the standard recall repair for single-table LSH (Lv et al., VLDB'07)
+    at 9× the candidate cost instead of 2⁸× for more planes or tables.
+    Motivated by G10's measurement on this corpus: single-bucket recall@5
+    is ~4% and distance-1 probing doubles it (measured 8% at sf0.01) —
+    still low in absolute terms because the synthetic embeddings are
+    near-random (near-orthogonal in 64-d, so sign agreement is close to
+    chance); on clustered real embeddings the same lever is the standard
+    recall repair, and G10 is the gauge that tunes it. Registry entry =
+    the frozen 8-plane parity twin."""
+    return ann_lsh_topk_probed(spark, sf_dir, PLANES, N_PLANES)
+
+
+def ann_lsh_topk_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2 library default: plane count derived from the corpus (see
     ``adaptive_n_planes``) paired with the matching query-directed probe
     budget (``adaptive_probe_budget`` — zero at the parity floor, so this
     is identical to the parity twin below the adaptive threshold)."""
-    tbs = TARGET_BUCKET_SIZE if target_bucket_size is None else target_bucket_size
-    planes = corpus_adaptive_planes(spark, sf_dir, tbs)
-    return ann_lsh_topk_probed(
-        spark, sf_dir, planes, n_probes=adaptive_probe_budget(len(planes))
-    )
+    planes = corpus_adaptive_planes(spark, sf_dir)
+    return ann_lsh_topk_probed(spark, sf_dir, planes, adaptive_probe_budget(len(planes)))
+
+
+def ann_lsh_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-TABLE OR'd sign-LSH (the classic L-tables construction,
+    Indyk-Motwani / Gionis et al. VLDB'99): three independent 8-plane
+    tables, each query's candidates = the UNION over tables of its bucket
+    mates, deduped by pair, then exact-rescored top-k. Recall of L OR'd
+    tables is 1−(1−r)^L for single-table recall r — the lever G8's
+    docstring promises for graphs and G10 now measures on this corpus:
+    8% vs single-table's 4% at sf0.01 (1−0.96³ ≈ 0.12 predicted on iid
+    buckets; near-random synthetics correlate), the same uplift Hamming-1
+    multiprobe reaches — from 3× candidate cost instead of multiprobe's
+    9× probes.
+
+    Not a separate registry key (registry frozen in round 4); measured as
+    the `lsh_mt3` method inside `ann_recall_report`.
+
+    Scale: candidate generation is L query joins (bucket equi-joins
+    against broadcast queries), unioned then pair-deduped — cost
+    L·Σ|bucket|², never N², and each join keeps the shape AQE handles for
+    G2 (never one join with an OR'd bucket predicate, which degenerates
+    to a nested loop)."""
+    base = _base(spark, sf_dir)
+    pairs = None
+    for t in range(N_TABLES):
+        c = _lsh_query_pairs(base, PLANE_TABLES[t], 0)
+        pairs = c if pairs is None else pairs.unionByName(c)
+    # same pair scores identically in every table → row-level distinct IS
+    # the pair dedup
+    return _topk(pairs.distinct())
 
 
 def _lsh_sql() -> str:
@@ -240,6 +330,47 @@ q AS (SELECT vec_id AS q_id, e AS qe, bucket AS qb FROM bbase WHERE vec_id < {N_
 scored AS (
   SELECT q.q_id, bbase.vec_id AS n_id, round({_cos_sql('q.qe', 'bbase.e')}, 6) AS score
   FROM bbase JOIN q ON bbase.bucket = q.qb AND bbase.vec_id <> q.q_id
+)
+{_TOPK_SQL_TAIL}
+"""
+
+
+def _lsh_multiprobe_sql() -> str:
+    flips = ", ".join(["(0)"] + [f"({1 << p})" for p in range(N_PLANES)])
+    return f"""
+WITH {_BASE_SQL},
+bbase AS (SELECT vec_id, e, {_bucket_sql('e')} AS bucket FROM base),
+q AS (SELECT vec_id AS q_id, e AS qe, bucket AS qb FROM bbase WHERE vec_id < {N_QUERIES}),
+flips(flip) AS (VALUES {flips}),
+probes AS (SELECT q_id, qe, xor(qb, flip) AS pb FROM q, flips),
+scored AS (
+  SELECT DISTINCT p.q_id, bbase.vec_id AS n_id,
+         round({_cos_sql('p.qe', 'bbase.e')}, 6) AS score
+  FROM bbase JOIN probes p ON bbase.bucket = p.pb AND bbase.vec_id <> p.q_id
+)
+{_TOPK_SQL_TAIL}
+"""
+
+
+def _lsh_multitable_sql() -> str:
+    branches = []
+    for t in range(N_TABLES):
+        branches.append(f"""
+  SELECT q.q_id, bb{t}.vec_id AS n_id,
+         round({_cos_sql('q.qe', f'bb{t}.e')}, 6) AS score
+  FROM bbase{t} bb{t}
+  JOIN qt{t} q ON bb{t}.bucket = q.qb AND bb{t}.vec_id <> q.q_id""")
+    tables = ",\n".join(
+        f"bbase{t} AS (SELECT vec_id, e, {_bucket_sql('e', PLANE_TABLES[t])} AS bucket FROM base),\n"
+        f"qt{t} AS (SELECT vec_id AS q_id, e AS qe, bucket AS qb FROM bbase{t} WHERE vec_id < {N_QUERIES})"
+        for t in range(N_TABLES)
+    )
+    union = "\n  UNION\n".join(branches)  # UNION (not ALL) = pair dedup
+    return f"""
+WITH {_BASE_SQL},
+{tables},
+scored AS (
+{union}
 )
 {_TOPK_SQL_TAIL}
 """
@@ -260,7 +391,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "e",
         "c_id",
-        F.round(_cos_spark(F.col("e"), F.col("ce")), 6).alias("cscore"),
+        F.round(dot_expr(F.col("e"), F.col("ce")), 6).alias("cscore"),
     )
     wa = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), F.asc("c_id"))
     assigned = scored.withColumn("rn", F.row_number().over(wa)).filter(F.col("rn") == 1).select(
@@ -283,7 +414,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("n_id"),
-            F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
+            F.round(dot_expr(F.col("qe"), F.col("e")), 6).alias("score"),
         )
         .distinct()
     )
@@ -507,7 +638,7 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped = (
         a.join(b, "cluster_id")
         .filter(F.col("va") < F.col("vb"))
-        .filter(F.round(_cos_spark(F.col("ea"), F.col("eb")), 4) >= SEM_T)
+        .filter(F.round(dot_expr(F.col("ea"), F.col("eb")), 4) >= SEM_T)
         .select("vb")
         .distinct()
     )
@@ -569,7 +700,7 @@ def _pq_parts(spark: SparkSession, sf_dir: str):
 
 
 def _d2(a, b):
-    return _dot_spark(a, a) + _dot_spark(b, b) - 2 * _dot_spark(a, b)
+    return dot_expr(a, a) + dot_expr(b, b) - 2 * dot_expr(a, b)
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,13 +954,10 @@ def knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs vs 13.9M at the 12 planes the formula picks there);
     THIS registry entry stays the frozen 8-plane parity twin because the
     static oracle SQL cannot count the corpus, and it equals the adaptive
-    output at every gate SF (the formula floors at N_PLANES). Recall is
-    additionally tunable with multiple independent plane tables OR'd
-    together (union of edge lists, dedup by pair) — same plan shape,
-    parameterized; vertices whose bucket is a singleton simply have no
-    edges, the standard LSH-graph tradeoff the multi-table variant
-    repairs."""
-    return knn_graph_lsh_planes(spark, sf_dir, planes=PLANES)
+    output at every gate SF (the formula floors at N_PLANES). Vertices
+    whose bucket is a singleton simply have no edges, the standard
+    LSH-graph tradeoff that probes (``knn_graph_lsh_probed``) repair."""
+    return knn_graph_lsh_probed(spark, sf_dir, PLANES, 0)
 
 
 def _knn_cogroup_score(_key, ldf, rdf):
@@ -937,25 +1065,34 @@ def _knn_topk_from_buckets(lhs: DataFrame, rhs: DataFrame) -> DataFrame:
     )
 
 
-def knn_graph_lsh_planes(
-    spark: SparkSession, sf_dir: str, planes: list[list[float]] | None = None
+def knn_graph_lsh_probed(
+    spark: SparkSession,
+    sf_dir: str,
+    planes: list[list[float]] | None = None,
+    n_probes: int = 0,
 ) -> DataFrame:
-    """G8 with a parameterized plane set — the documented scale lever
-    (more planes → smaller buckets → Σ|bucket|² bounded as the corpus
-    grows). The registry query is the fixed-parity 8-plane instance; the
-    sf10 bench times this variant at 8 AND 12 planes with measured
-    candidate counts so the lever is a recorded number.
+    """G8 at any ``(planes, n_probes)`` configuration — the GRAPH join
+    shape: every vertex's candidate set is the union of its own bucket and
+    its n_probes least-confident Hamming-1 buckets. Probe keys per src are
+    distinct, so a neighbor matches at most once — no pair dedup stage,
+    and the per-vertex top-k window is unchanged.
 
     r13: the per-pair scoring moved from the interpreted 64-dim fold to
     the cogrouped Arrow kernel (see _knn_cogroup_score) — interleaved
     sf10 A/B 37.1 s → 12.3 s on the adaptive config, output verified
     identical (the kernel reproduces the fold's summation order
-    bit-for-bit, so the frozen-parity oracle twin is unchanged)."""
-    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), planes))
-    lhs = base.select(
-        F.col("vec_id").alias("src_id"), F.col("e").alias("se"), "bucket"
-    )
-    rhs = base.select(F.col("vec_id").alias("nbr_id"), F.col("e").alias("ne"), "bucket")
+    bit-for-bit, so the frozen-parity oracle twin is unchanged).
+
+    With probes, the normalized vectors + plane dots are computed ONCE and
+    persisted; lhs (exploded probe keys) and rhs (own bucket) both derive
+    from the cached frame instead of each re-running the scan + normalize
+    + fold pass (r13 interleaved sf10 A/B 6.45 → 5.29 s; ~130 MB cached at
+    sf10, released at the next query start by persist_tracked). At
+    n_probes=0 both sides read the own bucket — no persist, no explode."""
+    plist = PLANES if planes is None else planes
+    own, probes = _lsh_keys(_base(spark, sf_dir), plist, n_probes, persist=n_probes > 0)
+    lhs = probes.select(F.col("vec_id").alias("src_id"), F.col("e").alias("se"), "bucket")
+    rhs = own.select(F.col("vec_id").alias("nbr_id"), F.col("e").alias("ne"), "bucket")
     return _knn_topk_from_buckets(lhs, rhs)
 
 
@@ -964,15 +1101,13 @@ def knn_graph_lsh_planes_fold(
 ) -> DataFrame:
     """The pre-r13 join+fold formulation, kept as the equivalence
     reference for tests/test_knn_arrow_kernel.py (NOT a registry path)."""
-    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), planes))
-    lhs = base.select(
-        F.col("vec_id").alias("src_id"), F.col("e").alias("se"), "bucket"
-    )
-    rhs = base.select(F.col("vec_id").alias("nbr_id"), F.col("e").alias("ne"), "bucket")
+    own, _ = _lsh_keys(_base(spark, sf_dir), PLANES if planes is None else planes, 0)
+    lhs = own.select(F.col("vec_id").alias("src_id"), F.col("e").alias("se"), "bucket")
+    rhs = own.select(F.col("vec_id").alias("nbr_id"), F.col("e").alias("ne"), "bucket")
     pairs = lhs.join(rhs, "bucket").filter(F.col("src_id") != F.col("nbr_id")).select(
         "src_id",
         "nbr_id",
-        F.round(_cos_spark(F.col("se"), F.col("ne")), 6).alias("score"),
+        F.round(dot_expr(F.col("se"), F.col("ne")), 6).alias("score"),
     )
     w = Window.partitionBy("src_id").orderBy(F.desc("score"), F.asc("nbr_id"))
     return (
@@ -1016,20 +1151,39 @@ def adaptive_n_planes(n_rows: int, target_bucket_size: int = TARGET_BUCKET_SIZE)
     return max(N_PLANES, min(MAX_PLANES, math.ceil(math.log2(max(1.0, n_rows / target_bucket_size)))))
 
 
-def corpus_adaptive_planes(
-    spark: SparkSession, sf_dir: str, target_bucket_size: int = TARGET_BUCKET_SIZE
-) -> list[list[float]]:
+def corpus_adaptive_planes(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The adaptive plane set for a corpus: one cheap count aggregate
     (parquet row-group metadata — no column read) → deterministic planes.
     A deployment with a stats manifest passes the known count straight to
     ``adaptive_n_planes`` and skips even that."""
     n = load_tables(spark, sf_dir, ["embeddings"])["embeddings"].count()
-    return knn_planes(adaptive_n_planes(n, target_bucket_size))
+    return knn_planes(adaptive_n_planes(n))
 
 
-def knn_graph_lsh_adaptive(
-    spark: SparkSession, sf_dir: str, target_bucket_size: int = TARGET_BUCKET_SIZE
-) -> DataFrame:
+# ── the adaptive default's recall compensation (VERDICT r11 task 1) ───────
+# The corpus-adaptive plane count bounds Σ|bucket|² as the corpus grows,
+# but each plane past the parity floor multiplies the single-bucket
+# collision probability by the per-plane sign-agreement rate (<1):
+# BENCH_r11 measured the recall@k gauge dropping 14% → 6% when the sf10
+# corpus moved 8 → 12 planes. Probing ALL Hamming-1 buckets (G11) repairs
+# recall but costs (1+m)× the bare candidate term — at 12 planes that
+# cancels most of the candidate savings the planes bought. The
+# query-directed probes of the sign-LSH key generator (least-confident flips
+# only) buy most of Hamming-1's recall at ≤ (1+n_probes)× the bare term.
+
+
+def adaptive_probe_budget(n_planes: int) -> int:
+    """Probe count paired with the adaptive plane count: zero at the
+    parity floor (small corpora keep the frozen 8-plane buckets and plans
+    byte-identical), else one query-directed Hamming-1 probe per plane the
+    formula added past the floor. Measured on the sf10 bench corpus
+    (BENCH_r12 knn_plane_lever): at 12 planes the 4-probe default holds
+    the recall gauge at-or-above the 8-plane single-bucket floor while the
+    candidate term stays ~(1+probes)/13.5 ≈ 37% of the 8-plane cost."""
+    return max(0, n_planes - N_PLANES)
+
+
+def knn_graph_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8, the LIBRARY DEFAULT entry point: k-NN graph with the plane
     count derived from the corpus (adaptive_n_planes) — so Σ|bucket|²
     stays bounded as the corpus grows — AND, from round 12, the recall
@@ -1044,38 +1198,73 @@ def knn_graph_lsh_adaptive(
     corpus); at the small gate SFs the adaptive default produces an
     identical graph because the formula floors at the parity count where
     the probe budget is zero."""
-    planes = corpus_adaptive_planes(spark, sf_dir, target_bucket_size)
-    return knn_graph_lsh_probed(
-        spark, sf_dir, planes=planes, n_probes=adaptive_probe_budget(len(planes))
-    )
+    planes = corpus_adaptive_planes(spark, sf_dir)
+    return knn_graph_lsh_probed(spark, sf_dir, planes, adaptive_probe_budget(len(planes)))
 
 
 def knn_candidate_stats(
-    spark: SparkSession, sf_dir: str, planes: list[list[float]] | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    planes: list[list[float]] | None = None,
+    n_probes: int = 0,
 ) -> dict:
-    """G8 scale instrumentation (VERDICT r09 task 1): bucket-count /
-    max-bucket / candidate-pair terms of the bucket equi-self-join. The
-    join emits ORDERED pairs (src ≠ nbr), so cand_pairs = Σ n·(n−1) — the
-    exact cosine-fold count the candidate stage pays. NOT timed."""
-    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), planes))
+    """Scale instrumentation of a ``(planes, n_probes)`` configuration
+    (VERDICT r09 task 1): bucket count, max bucket, and the candidate
+    pairs the graph join scores. The join emits ORDERED pairs (src ≠
+    nbr): at 0 probes cand_pairs = Σ n·(n−1); with probes it is the sum
+    over (src, probe key) of |bucket(key)| minus the self matches (each
+    src meets itself exactly once, through its own key). NOT timed; the
+    counts ARE the scale claim."""
+    plist = PLANES if planes is None else planes
+    own, probes = _lsh_keys(_base(spark, sf_dir), plist, n_probes)
+    sizes = own.groupBy("bucket").agg(F.count("*").alias("n"))
     n = F.col("n")
-    row = (
-        base.groupBy("bucket")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.count("*").alias("buckets"),
-            F.max(n).alias("max_bucket"),
-            F.sum((n * (n - F.lit(1))).cast("long")).alias("pairs"),
-            F.sum(n).alias("rows"),
+    row = sizes.agg(
+        F.count("*").alias("buckets"),
+        F.max(n).alias("max_bucket"),
+        F.sum((n * (n - F.lit(1))).cast("long")).alias("pairs"),
+        F.sum(n).alias("rows"),
+    ).first()
+    rows, cand_pairs = int(row["rows"] or 0), int(row["pairs"] or 0)
+    if n_probes > 0:
+        matches = (
+            probes.select("bucket")
+            .join(sizes, "bucket")
+            .agg(F.sum("n").cast("long"))
+            .first()[0]
         )
-        .first()
-    )
+        cand_pairs = int(matches or 0) - rows
     return {
-        "rows": int(row["rows"] or 0),
+        "rows": rows,
         "buckets": int(row["buckets"] or 0),
         "max_bucket": int(row["max_bucket"] or 0),
-        "cand_pairs": int(row["pairs"] or 0),
+        "cand_pairs": cand_pairs,
+        "n_planes": len(plist),
+        "n_probes": max(0, n_probes),
+    }
+
+
+def lsh_recall(
+    spark: SparkSession,
+    sf_dir: str,
+    planes: list[list[float]] | None = None,
+    n_probes: int = 0,
+) -> dict:
+    """The G10 recall gauge for a ``(planes, n_probes)`` configuration:
+    exact-integer recall@k of the query path vs the G1 brute baseline, so
+    the recall COST of added planes (fewer true neighbors share a smaller
+    bucket) and the repair bought by probes are recorded next to their
+    candidate terms. Returns Σ hits over Σ k across the query set."""
+    brute = ann_brute_topk(spark, sf_dir).select("q_id", "n_id")
+    approx = ann_lsh_topk_probed(spark, sf_dir, planes, n_probes).select("q_id", "n_id")
+    hits = brute.join(approx, ["q_id", "n_id"]).count()
+    total = brute.count()
+    return {
         "n_planes": len(planes) if planes is not None else N_PLANES,
+        "n_probes": max(0, n_probes),
+        "hits": int(hits),
+        "total": int(total),
+        "recall_pct": round(100.0 * hits / total, 1) if total else 0.0,
     }
 
 
@@ -1093,413 +1282,6 @@ SELECT src_id, nbr_id, score, rank FROM (
          row_number() OVER (PARTITION BY src_id ORDER BY score DESC, nbr_id ASC) AS rank
   FROM scored
 ) WHERE rank <= {KNN_GRAPH_K}
-"""
-
-
-def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G11 — multi-probe sign-LSH: each query probes its own bucket AND
-    every bucket at Hamming distance 1 (flip one of the 8 sign bits) —
-    the standard recall repair for single-table LSH (Lv et al., VLDB'07)
-    at 9× the candidate cost instead of 2⁸× for more planes or tables.
-    Motivated by G10's measurement on this corpus: single-bucket recall@5
-    is ~4% and distance-1 probing doubles it (measured 8% at sf0.01) —
-    still low in absolute terms because the synthetic embeddings are
-    near-random (near-orthogonal in 64-d, so sign agreement is close to
-    chance); on clustered real embeddings the same lever is the standard
-    recall repair, and G10 is the gauge that tunes it.
-
-    Scale: probe buckets are generated per query (|queries| · (P+1) rows,
-    broadcast); candidate generation stays a bucket equi-join against the
-    corpus — same plan shape as G2, wider probe dim. Registry entry = the
-    frozen 8-plane parity twin; ``ann_lsh_multiprobe_adaptive`` derives
-    the plane count from the corpus."""
-    return ann_lsh_multiprobe_planes(spark, sf_dir, planes=PLANES)
-
-
-def ann_lsh_multiprobe_planes(
-    spark: SparkSession, sf_dir: str, planes: list[list[float]] | None = None
-) -> DataFrame:
-    """G11 with a parameterized plane set (probe count tracks the plane
-    count: own bucket + one flip per plane)."""
-    plist = PLANES if planes is None else planes
-    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), plist))
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("bucket").alias("qb")
-    )
-    flips = F.array(*([F.lit(0)] + [F.lit(1 << p) for p in range(len(plist))]))
-    probes = (
-        q.select("q_id", "qe", "qb", F.explode(flips).alias("flip"))
-        .select("q_id", "qe", (F.col("qb").bitwiseXOR(F.col("flip"))).alias("pb"))
-    )
-    pairs = base.join(
-        F.broadcast(probes),
-        (F.col("bucket") == F.col("pb")) & (F.col("vec_id") != F.col("q_id")),
-    ).select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
-    ).distinct()
-    return _topk(pairs)
-
-
-def ann_lsh_multiprobe_adaptive(
-    spark: SparkSession, sf_dir: str, target_bucket_size: int | None = None
-) -> DataFrame:
-    """G11 library default: plane count derived from the corpus (see
-    ``adaptive_n_planes``)."""
-    tbs = TARGET_BUCKET_SIZE if target_bucket_size is None else target_bucket_size
-    return ann_lsh_multiprobe_planes(
-        spark, sf_dir, corpus_adaptive_planes(spark, sf_dir, tbs)
-    )
-
-
-def lsh_recall_planes(
-    spark: SparkSession, sf_dir: str, planes: list[list[float]] | None = None
-) -> dict:
-    """Measured recall@k of single-table sign-LSH at a given plane set vs
-    the exact G1 baseline — the G10 gauge, parameterized, so the recall
-    COST of the adaptive plane count is recorded next to its candidate
-    savings (VERDICT r10 task 1: more planes = smaller buckets = fewer
-    candidates, but also fewer true neighbors sharing the query's bucket).
-    Returns exact integers: Σ hits over Σ k across the query set."""
-    brute = ann_brute_topk(spark, sf_dir).select("q_id", "n_id")
-    approx = ann_lsh_topk_planes(spark, sf_dir, planes).select("q_id", "n_id")
-    hits = brute.join(approx, ["q_id", "n_id"]).count()
-    total = brute.count()
-    return {
-        "n_planes": len(planes) if planes is not None else N_PLANES,
-        "hits": int(hits),
-        "total": int(total),
-        "recall_pct": round(100.0 * hits / total, 1) if total else 0.0,
-    }
-
-
-# ── query-directed probing (Lv et al., VLDB'07) — the adaptive default's
-# recall compensation (VERDICT r11 task 1) ──────────────────────────────────
-#
-# The corpus-adaptive plane count (adaptive_n_planes) bounds Σ|bucket|² as
-# the corpus grows, but each plane past the parity floor multiplies the
-# single-bucket collision probability by the per-plane sign-agreement rate
-# (<1): BENCH_r11 measured the recall@k gauge dropping 14% → 6% when the
-# sf10 corpus moved 8 → 12 planes. Probing ALL Hamming-1 buckets (G11)
-# repairs recall but costs (1+m)× the bare candidate term — at 12 planes
-# that cancels most of the candidate savings the planes bought. The
-# query-directed repair probes ONLY the flips most likely to hold missed
-# neighbors: a near neighbor that lands one bucket away almost always
-# differs on a plane whose dot product with the query is SMALL (the vector
-# sits near that boundary), so flipping the n_probes smallest-|dot| bits
-# buys most of Hamming-1's recall at a fraction of its probes. Everything
-# is a column expression over the per-plane dots the bucket key already
-# computes — no Python, no extra scan; the probe side explodes to
-# (1+n_probes) keys per row and the candidate join stays a bucket
-# equi-join, so cost is ≤ (1+n_probes)× the bare term at any scale.
-
-
-def adaptive_probe_budget(n_planes: int) -> int:
-    """Probe count paired with the adaptive plane count: zero at the
-    parity floor (small corpora keep the frozen 8-plane buckets and plans
-    byte-identical), else one query-directed Hamming-1 probe per plane the
-    formula added past the floor. Measured on the sf10 bench corpus
-    (BENCH_r12 knn_plane_lever): at 12 planes the 4-probe default holds
-    the recall gauge at-or-above the 8-plane single-bucket floor while the
-    candidate term stays ~(1+probes)/13.5 ≈ 37% of the 8-plane cost."""
-    return max(0, n_planes - N_PLANES)
-
-
-def _plane_dots(e, planes: list[list[float]]):
-    """array<double> of the per-plane dots — ONE O(planes·dim) fold pass."""
-    dots = []
-    for plane in planes:
-        lits = F.array(*[F.lit(float(x)) for x in plane])
-        dots.append(
-            F.aggregate(
-                F.zip_with(e, lits, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-            )
-        )
-    return F.array(*dots)
-
-
-def _bucket_from_dots(ds, n_planes: int):
-    """Sign-bucket key from a MATERIALIZED dots array (cheap element_at
-    references — the folds are paid once wherever `ds` was computed)."""
-    bucket = None
-    for p in range(n_planes):
-        d = F.element_at(ds, p + 1)
-        term = F.when(d > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
-    return bucket.cast("int")
-
-
-def _margins_from_dots(ds, n_planes: int):
-    """(|dot|, bit) structs sorted ascending — least-confident plane first,
-    plane index breaking exact ties (struct ordering is field-by-field)."""
-    return F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    F.abs(F.element_at(ds, p + 1)).alias("m"),
-                    F.lit(1 << p).alias("bit"),
-                )
-                for p in range(n_planes)
-            ]
-        )
-    )
-
-
-def _keys_from(bucket, margins, n_probes: int):
-    """Probe-key array from MATERIALIZED bucket/margins COLUMNS. The
-    transform lambda references `bucket` once per probe element — that is
-    only safe when `bucket` is an attribute; an inline bucket EXPRESSION
-    here re-evaluates its 12 interpreted plane folds per element (the r13
-    REST profile measured the old inline form at ~6 fold-passes per row:
-    ~180 exec-s of the probed lhs stage at sf10)."""
-    if n_probes <= 0:
-        return F.array(bucket)
-    probes = F.transform(
-        F.slice(margins, 1, n_probes), lambda s: bucket.bitwiseXOR(s["bit"])
-    )
-    return F.concat(F.array(bucket), probes)
-
-
-def _keys_with_probes(e, planes: list[list[float]], n_probes: int):
-    """array<int> of 1 + n_probes bucket keys for a vector: its own key
-    plus the keys with the n_probes least-confident sign bits flipped
-    (smallest |dot| first; plane index breaks exact ties).
-
-    NOTE: as one inline expression this evaluates the plane dots several
-    times (bucket + margins + per-probe lambda) — fine for the tiny query
-    sets it is applied to (G2/G11 probes, stats instrumentation). The
-    corpus-sized knn_graph_lsh_probed lhs instead materializes dots/
-    bucket/margins as columns below the explode (see there)."""
-    ds = _plane_dots(e, planes)
-    bucket = _bucket_from_dots(ds, len(planes))
-    if n_probes <= 0:
-        return F.array(bucket)
-    margins = _margins_from_dots(ds, len(planes))
-    return _keys_from(bucket, margins, n_probes)
-
-
-def knn_graph_lsh_probed(
-    spark: SparkSession,
-    sf_dir: str,
-    planes: list[list[float]] | None = None,
-    n_probes: int = 0,
-) -> DataFrame:
-    """G8 with query-directed probing: every vertex's candidate set is the
-    union of its own bucket and its n_probes least-confident Hamming-1
-    buckets. Probe keys per src are distinct, so a neighbor matches at
-    most once — no pair dedup stage, and the per-vertex top-k window is
-    unchanged. n_probes=0 is byte-identical to knn_graph_lsh_planes."""
-    plist = PLANES if planes is None else planes
-    if n_probes <= 0:
-        return knn_graph_lsh_planes(spark, sf_dir, plist)
-    base = _base(spark, sf_dir)
-    # r13 (REST-profiled): dots → (bucket, margins) → keys are built over
-    # THREE projections so each row pays the 12 interpreted plane folds
-    # exactly ONCE. The old single-expression form re-evaluated the bucket
-    # (all 12 folds) inside the per-probe transform lambda and again in
-    # the margins — ~6 fold-passes per row, 180 exec-s of this stage at
-    # sf10, the largest cost left after the Arrow scoring kernel.
-    # CollapseProject cannot re-inline the fold array: it is an expensive
-    # alias referenced more than once (SPARK-36718), and the explode is a
-    # Generate, which no rule collapses a Project into.
-    from australian_company_etl_spark.operators.cache import persist_tracked
-
-    # r13 second pass (interleaved sf10 A/B 6.45 → 5.29 s): the normalized
-    # vectors + plane dots are computed ONCE and persisted; lhs (probe
-    # keys) and rhs (own bucket) both derive from the cached frame instead
-    # of each re-running the scan + normalize + 12-fold pass. ~130 MB
-    # cached at the sf10 tier, released at the next query start
-    # (persist_tracked). Small corpora never reach this path (the adaptive
-    # default floors to the probe-free planes twin below the threshold).
-    pre = persist_tracked(
-        base.select("vec_id", "e", _plane_dots(F.col("e"), plist).alias("ds"))
-    )
-    keyed = pre.select(
-        "vec_id",
-        "e",
-        _bucket_from_dots(F.col("ds"), len(plist)).alias("b0"),
-        _margins_from_dots(F.col("ds"), len(plist)).alias("mg"),
-    )
-    lhs = keyed.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("e").alias("se"),
-        F.explode(_keys_from(F.col("b0"), F.col("mg"), n_probes)).alias("bucket"),
-    )
-    rhs = keyed.select(
-        F.col("vec_id").alias("nbr_id"),
-        F.col("e").alias("ne"),
-        F.col("b0").alias("bucket"),
-    )
-    return _knn_topk_from_buckets(lhs, rhs)
-
-
-def ann_lsh_topk_probed(
-    spark: SparkSession,
-    sf_dir: str,
-    planes: list[list[float]] | None = None,
-    n_probes: int = 0,
-) -> DataFrame:
-    """G2 with query-directed probing (the query set probes its own bucket
-    + its n_probes least-confident flips). n_probes=0 ≡ the bare plan."""
-    plist = PLANES if planes is None else planes
-    if n_probes <= 0:
-        return ann_lsh_topk_planes(spark, sf_dir, plist)
-    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), plist))
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.explode(_keys_with_probes(F.col("e"), plist, n_probes)).alias("pb"),
-    )
-    pairs = base.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("pb")) & (F.col("vec_id") != F.col("q_id")),
-    ).select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
-    )
-    return _topk(pairs)
-
-
-def knn_candidate_stats_probed(
-    spark: SparkSession,
-    sf_dir: str,
-    planes: list[list[float]] | None = None,
-    n_probes: int = 0,
-) -> dict:
-    """Candidate-pair term of the probed graph join — Σ over (src, key) of
-    |bucket(key)| minus the self matches (each src meets itself exactly
-    once, through its own key). n_probes=0 reproduces knn_candidate_stats'
-    Σ n·(n−1). NOT timed; the count IS the scale claim."""
-    plist = PLANES if planes is None else planes
-    base = _base(spark, sf_dir)
-    sizes = (
-        base.select(_bucket_spark(F.col("e"), plist).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n"))
-    )
-    probe_rows = base.select(
-        F.explode(_keys_with_probes(F.col("e"), plist, n_probes)).alias("bucket")
-    )
-    row = (
-        probe_rows.join(sizes, "bucket")
-        .agg(F.sum("n").cast("long").alias("matches"))
-        .first()
-    )
-    n_rows = base.count()
-    return {
-        "rows": int(n_rows),
-        "cand_pairs": int(row["matches"] or 0) - n_rows,
-        "n_planes": len(plist),
-        "n_probes": int(max(0, n_probes)),
-    }
-
-
-def lsh_recall_probed(
-    spark: SparkSession,
-    sf_dir: str,
-    planes: list[list[float]] | None = None,
-    n_probes: int = 0,
-) -> dict:
-    """The G10 recall gauge for a (planes, probes) config — exact-integer
-    recall@k of the probed query path vs the brute baseline."""
-    brute = ann_brute_topk(spark, sf_dir).select("q_id", "n_id")
-    approx = ann_lsh_topk_probed(spark, sf_dir, planes, n_probes).select("q_id", "n_id")
-    hits = brute.join(approx, ["q_id", "n_id"]).count()
-    total = brute.count()
-    return {
-        "n_planes": len(planes) if planes is not None else N_PLANES,
-        "n_probes": int(max(0, n_probes)),
-        "hits": int(hits),
-        "total": int(total),
-        "recall_pct": round(100.0 * hits / total, 1) if total else 0.0,
-    }
-
-
-def _lsh_multiprobe_sql() -> str:
-    flips = ", ".join(["(0)"] + [f"({1 << p})" for p in range(N_PLANES)])
-    return f"""
-WITH {_BASE_SQL},
-bbase AS (SELECT vec_id, e, {_bucket_sql('e')} AS bucket FROM base),
-q AS (SELECT vec_id AS q_id, e AS qe, bucket AS qb FROM bbase WHERE vec_id < {N_QUERIES}),
-flips(flip) AS (VALUES {flips}),
-probes AS (SELECT q_id, qe, xor(qb, flip) AS pb FROM q, flips),
-scored AS (
-  SELECT DISTINCT p.q_id, bbase.vec_id AS n_id,
-         round({_cos_sql('p.qe', 'bbase.e')}, 6) AS score
-  FROM bbase JOIN probes p ON bbase.bucket = p.pb AND bbase.vec_id <> p.q_id
-)
-{_TOPK_SQL_TAIL}
-"""
-
-
-def ann_lsh_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-TABLE OR'd sign-LSH (the classic L-tables construction,
-    Indyk-Motwani / Gionis et al. VLDB'99): three independent 8-plane
-    tables, each query's candidates = the UNION over tables of its bucket
-    mates, deduped by pair, then exact-rescored top-k. Recall of L OR'd
-    tables is 1−(1−r)^L for single-table recall r — the lever G8's
-    docstring promises for graphs and G10 now measures on this corpus:
-    8% vs single-table's 4% at sf0.01 (1−0.96³ ≈ 0.12 predicted on iid
-    buckets; near-random synthetics correlate), the same uplift Hamming-1
-    multiprobe reaches — from 3× candidate cost instead of multiprobe's
-    9× probes.
-
-    Not a separate registry key (registry frozen in round 4); measured as
-    the `lsh_mt3` method inside `ann_recall_report`.
-
-    Scale: bucket columns for all L tables come from ONE corpus pass
-    (independent column expressions, no extra scan); candidate generation
-    is L bucket equi-joins against broadcast queries, unioned then
-    pair-deduped — cost L·Σ|bucket|², never N², and each join keeps the
-    same shape AQE handles for G2."""
-    base = _base(spark, sf_dir)
-    for t in range(N_TABLES):
-        base = base.withColumn(f"b{t}", _bucket_spark(F.col("e"), PLANE_TABLES[t]))
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        *[F.col(f"b{t}").alias(f"qb{t}") for t in range(N_TABLES)],
-    )
-    pairs = None
-    for t in range(N_TABLES):
-        qt = q.select("q_id", "qe", F.col(f"qb{t}").alias("qb"))
-        c = base.join(
-            F.broadcast(qt),
-            (F.col(f"b{t}") == F.col("qb")) & (F.col("vec_id") != F.col("q_id")),
-        ).select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
-        )
-        pairs = c if pairs is None else pairs.unionByName(c)
-    # same pair scores identically in every table → row-level distinct IS
-    # the pair dedup
-    return _topk(pairs.distinct())
-
-
-def _lsh_multitable_sql() -> str:
-    branches = []
-    for t in range(N_TABLES):
-        branches.append(f"""
-  SELECT q.q_id, bb{t}.vec_id AS n_id,
-         round({_cos_sql('q.qe', f'bb{t}.e')}, 6) AS score
-  FROM bbase{t} bb{t}
-  JOIN qt{t} q ON bb{t}.bucket = q.qb AND bb{t}.vec_id <> q.q_id""")
-    tables = ",\n".join(
-        f"bbase{t} AS (SELECT vec_id, e, {_bucket_sql('e', PLANE_TABLES[t])} AS bucket FROM base),\n"
-        f"qt{t} AS (SELECT vec_id AS q_id, e AS qe, bucket AS qb FROM bbase{t} WHERE vec_id < {N_QUERIES})"
-        for t in range(N_TABLES)
-    )
-    union = "\n  UNION\n".join(branches)  # UNION (not ALL) = pair dedup
-    return f"""
-WITH {_BASE_SQL},
-{tables},
-scored AS (
-{union}
-)
-{_TOPK_SQL_TAIL}
 """
 
 

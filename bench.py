@@ -88,6 +88,7 @@ def _plan_source_digest() -> str:
     root = os.path.dirname(os.path.abspath(__file__))
     h = hashlib.sha256()
     for rel in (
+        "australian_company_etl_spark/functions/vectors.py",
         "australian_company_etl_spark/plans/dedup.py",
         "australian_company_etl_spark/plans/similarity.py",
         "australian_company_etl_spark/plans/text.py",
@@ -457,12 +458,10 @@ def _sf10_section(spark, queries, result: dict) -> dict:
         adaptive_n_planes,
         adaptive_probe_budget,
         knn_candidate_stats,
-        knn_candidate_stats_probed,
+        knn_graph_lsh,
         knn_graph_lsh_adaptive,
         knn_planes,
-        knn_graph_lsh_planes,
-        lsh_recall_planes,
-        lsh_recall_probed,
+        lsh_recall,
     )
     from australian_company_etl_spark.plans.text import inverted_index_stats
 
@@ -488,6 +487,10 @@ def _sf10_section(spark, queries, result: dict) -> dict:
             stats_cache[name] = fn(spark, *args)
         return stats_cache[name]
 
+    def _bare(name: str, fn, *args):
+        # probe-free records keep their pre-n_probes key set in bench_out.json
+        return {k: v for k, v in _stat(name, fn, *args).items() if k != "n_probes"}
+
     spark.catalog.clearCache()
     cand = {
         "dedup_minhash_lsh": {
@@ -499,8 +502,8 @@ def _sf10_section(spark, queries, result: dict) -> dict:
             "sf10": _stat("setsim:sf10", setsim_candidate_stats, sf10_dir),
         },
         "knn_graph_lsh": {
-            "sf1": _stat("knn8:sf1", knn_candidate_stats, sf1_dir),
-            "sf10": _stat("knn8:sf10", knn_candidate_stats, sf10_dir),
+            "sf1": _bare("knn8p0:sf1", knn_candidate_stats, sf1_dir),
+            "sf10": _bare("knn8p0:sf10", knn_candidate_stats, sf10_dir),
         },
         "text_inverted_index": {
             "sf1": _stat("inv:sf1", inverted_index_stats, sf1_dir),
@@ -516,12 +519,12 @@ def _sf10_section(spark, queries, result: dict) -> dict:
     # construction (~190M ordered pairs over the 100× corpus, cand stats
     # above); it is timed only under SPARK_GRAFT_SF10_KNN8=1. The recall
     # COST of the added planes is recorded alongside the candidate
-    # savings (lsh_recall_planes at the parity and adaptive counts).
+    # savings (lsh_recall at the parity and adaptive counts).
     n_emb = spark.read.parquet(os.path.join(sf10_dir, "embeddings.parquet")).count()
     n_adapt = adaptive_n_planes(n_emb)
     p_adapt = knn_planes(n_adapt)
-    cand["knn_graph_lsh"]["sf10_adaptive"] = dict(
-        _stat(f"knn{n_adapt}:sf10", knn_candidate_stats, sf10_dir, p_adapt)
+    cand["knn_graph_lsh"]["sf10_adaptive"] = _bare(
+        f"knn{n_adapt}p0:sf10", knn_candidate_stats, sf10_dir, p_adapt
     )
     # r12: the adaptive default pairs the plane count with a query-directed
     # probe budget (adaptive_probe_budget) to buy back the recall the added
@@ -533,16 +536,8 @@ def _sf10_section(spark, queries, result: dict) -> dict:
     probe_curve = sorted({0, max(0, n_probe_budget - 2), n_probe_budget})
     for planes_n, probes_n in [(N_PLANES, 0)] + [(n_adapt, t) for t in probe_curve]:
         pl = knn_planes(planes_n)
-        rec = _stat(
-            f"lshrecall{planes_n}p{probes_n}:sf10", lsh_recall_probed, sf10_dir, pl, probes_n
-        )
-        cst = _stat(
-            f"knn{planes_n}p{probes_n}:sf10",
-            knn_candidate_stats_probed,
-            sf10_dir,
-            pl,
-            probes_n,
-        )
+        rec = _stat(f"lshrecall{planes_n}p{probes_n}:sf10", lsh_recall, sf10_dir, pl, probes_n)
+        cst = _stat(f"knn{planes_n}p{probes_n}:sf10", knn_candidate_stats, sf10_dir, pl, probes_n)
         configs.append(
             {
                 "planes": planes_n,
@@ -555,10 +550,8 @@ def _sf10_section(spark, queries, result: dict) -> dict:
             }
         )
     recall = {
-        "planes8": _stat("lshrecall8:sf10", lsh_recall_planes, sf10_dir),
-        f"planes{n_adapt}": _stat(
-            f"lshrecall{n_adapt}:sf10", lsh_recall_planes, sf10_dir, p_adapt
-        ),
+        "planes8": _bare("lshrecall8p0:sf10", lsh_recall, sf10_dir),
+        f"planes{n_adapt}": _bare(f"lshrecall{n_adapt}p0:sf10", lsh_recall, sf10_dir, p_adapt),
     }
     # F9 trend terms (VERDICT r10 task 7): per-iteration shuffle rows of
     # the iterative-graph family at both SFs
@@ -584,9 +577,7 @@ def _sf10_section(spark, queries, result: dict) -> dict:
     if os.environ.get("SPARK_GRAFT_SF10_KNN8", "0") == "1":
         spark.catalog.clearCache()
         t0 = _time.perf_counter()
-        knn_graph_lsh_planes(spark, sf10_dir, None).write.mode("overwrite").format(
-            "noop"
-        ).save()
+        knn_graph_lsh(spark, sf10_dir).write.mode("overwrite").format("noop").save()
         lever["knn_planes8_sec_single_run"] = round(_time.perf_counter() - t0, 3)
     print(f"# [sf10] knn lever: {lever}", file=sys.stderr)
 

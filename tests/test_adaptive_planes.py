@@ -91,17 +91,6 @@ def test_lsh_topk_adaptive_equals_parity_at_gate_sf(spark, sf_dir, _rows):
     )
 
 
-def test_multiprobe_adaptive_equals_parity_at_gate_sf(spark, sf_dir, _rows):
-    from australian_company_etl_spark.plans.similarity import (
-        ann_lsh_multiprobe,
-        ann_lsh_multiprobe_adaptive,
-    )
-
-    assert _rows(ann_lsh_multiprobe_adaptive(spark, sf_dir)) == _rows(
-        ann_lsh_multiprobe(spark, sf_dir)
-    )
-
-
 def test_more_planes_never_increase_candidate_pairs(spark, sf_dir):
     from australian_company_etl_spark.plans.similarity import knn_candidate_stats
 
@@ -113,15 +102,15 @@ def test_more_planes_never_increase_candidate_pairs(spark, sf_dir):
 
 
 def test_lsh_recall_planes_gauge(spark, sf_dir):
-    from australian_company_etl_spark.plans.similarity import lsh_recall_planes
+    from australian_company_etl_spark.plans.similarity import lsh_recall
 
-    rep = lsh_recall_planes(spark, sf_dir)
-    assert rep["n_planes"] == N_PLANES
+    rep = lsh_recall(spark, sf_dir)
+    assert rep["n_planes"] == N_PLANES and rep["n_probes"] == 0
     assert 0 <= rep["hits"] <= rep["total"]
     assert rep["total"] > 0
     assert rep["recall_pct"] == round(100.0 * rep["hits"] / rep["total"], 1)
     # more planes can only shrink buckets → recall never improves
-    rep12 = lsh_recall_planes(spark, sf_dir, knn_planes(12))
+    rep12 = lsh_recall(spark, sf_dir, knn_planes(12))
     assert rep12["hits"] <= rep["hits"]
 
 

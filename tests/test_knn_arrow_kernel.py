@@ -13,7 +13,9 @@ tests pin that claim:
    zero-norm (NULL-normalized) vectors sharing a bucket with real ones,
    exact-duplicate vectors (rounded-score ties broken by nbr_id), and a
    bucket with a single vector (no pairs);
-4. the probed (adaptive) variant against a probe-free union construction.
+4. the probed (adaptive) variant against a probe-free union construction;
+5. a non-finite (NaN/inf) embedding raises instead of silently losing
+   neighbors in the top-K prune.
 """
 
 from __future__ import annotations
@@ -88,8 +90,8 @@ def crafted_dir(spark, tmp_path_factory):
 
 def test_knn_graph_arrow_equals_fold_on_crafted_corpus(spark, crafted_dir):
     from australian_company_etl_spark.plans.similarity import (
-        knn_graph_lsh_planes,
         knn_graph_lsh_planes_fold,
+        knn_graph_lsh_probed,
         knn_planes,
     )
 
@@ -99,12 +101,12 @@ def test_knn_graph_arrow_equals_fold_on_crafted_corpus(spark, crafted_dir):
             tuple(r) for r in knn_graph_lsh_planes_fold(spark, crafted_dir, pl).collect()
         )
         got = sorted(
-            tuple(r) for r in knn_graph_lsh_planes(spark, crafted_dir, pl).collect()
+            tuple(r) for r in knn_graph_lsh_probed(spark, crafted_dir, pl, 0).collect()
         )
         assert got == exp and len(exp) > 0
     # NULL-scored edges exist (zero vectors pair inside bucket 0) and are
     # ranked after every real score — presence pins the None-not-NaN rule
-    rows = knn_graph_lsh_planes(spark, crafted_dir, knn_planes(2)).collect()
+    rows = knn_graph_lsh_probed(spark, crafted_dir, knn_planes(2), 0).collect()
     null_scores = [r for r in rows if r["score"] is None]
     assert null_scores, "crafted corpus should produce NULL-score edges"
 
@@ -113,33 +115,23 @@ def test_knn_graph_probed_arrow_equals_union_of_probe_buckets(spark, sf_dir):
     """The probed variant must equal scoring each vertex against the UNION
     of its own and probe buckets — built here from the fold formulation's
     building blocks, independent of the Arrow path."""
+    from australian_company_etl_spark.functions.vectors import dot_expr
     from australian_company_etl_spark.plans.similarity import (
         KNN_GRAPH_K,
         _base,
-        _bucket_spark,
-        _cos_spark,
-        _keys_with_probes,
+        _lsh_keys,
         knn_graph_lsh_probed,
         knn_planes,
     )
     from pyspark.sql import Window
 
-    pl = knn_planes(10)
-    base = _base(spark, sf_dir)
-    lhs = base.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("e").alias("se"),
-        F.explode(_keys_with_probes(F.col("e"), pl, 2)).alias("bucket"),
-    )
-    rhs = base.select(
-        F.col("vec_id").alias("nbr_id"),
-        F.col("e").alias("ne"),
-        _bucket_spark(F.col("e"), pl).alias("bucket"),
-    )
+    own, probes = _lsh_keys(_base(spark, sf_dir), knn_planes(10), 2)
+    lhs = probes.select(F.col("vec_id").alias("src_id"), F.col("e").alias("se"), "bucket")
+    rhs = own.select(F.col("vec_id").alias("nbr_id"), F.col("e").alias("ne"), "bucket")
     pairs = lhs.join(rhs, "bucket").filter(F.col("src_id") != F.col("nbr_id")).select(
         "src_id",
         "nbr_id",
-        F.round(_cos_spark(F.col("se"), F.col("ne")), 6).alias("score"),
+        F.round(dot_expr(F.col("se"), F.col("ne")), 6).alias("score"),
     )
     w = Window.partitionBy("src_id").orderBy(F.desc("score"), F.asc("nbr_id"))
     exp = sorted(
@@ -150,6 +142,33 @@ def test_knn_graph_probed_arrow_equals_union_of_probe_buckets(spark, sf_dir):
         .collect()
     )
     got = sorted(
-        tuple(r) for r in knn_graph_lsh_probed(spark, sf_dir, pl, 2).collect()
+        tuple(r) for r in knn_graph_lsh_probed(spark, sf_dir, knn_planes(10), 2).collect()
     )
     assert got == exp and len(exp) > 0
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_non_finite_embedding_raises(spark, tmp_path, bad):
+    """A NaN/inf component makes the norm NaN/+inf; Spark orders NaN above
+    every number, so it used to pass the zero-norm guard and reach the
+    top-K prune, which then dropped real neighbors of every vector in its
+    bucket without a trace. It must fail loudly, naming the vector."""
+    from australian_company_etl_spark.plans.dedup import dedup_embedding_cosine
+    from australian_company_etl_spark.plans.similarity import (
+        knn_graph_lsh_probed,
+        knn_planes,
+    )
+
+    rng = np.random.default_rng(11)
+    rows = [(vid, "l", rng.standard_normal(64).tolist()) for vid in range(7)]
+    rows.append((7, "l", [bad] * 64))
+    spark.createDataFrame(
+        rows, "vec_id long, label string, embedding array<double>"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    d = str(tmp_path)
+    for df in (
+        knn_graph_lsh_probed(spark, d, knn_planes(1), 0),
+        dedup_embedding_cosine(spark, d),
+    ):
+        with pytest.raises(Exception, match="non-finite embedding norm at vec_id 7"):
+            df.collect()

@@ -4,8 +4,8 @@ adaptive plane count's recall cost (VERDICT r11 task 1).
 The adaptive LSH default (G2/G8) pairs ``adaptive_n_planes`` with
 ``adaptive_probe_budget`` Hamming-1 probes chosen by smallest |dot| margin
 (Lv et al. query-directed multiprobe). These tests pin the budget formula,
-the zero-probe identity with the bare plans, probe-key structure, and the
-monotone recall/cost behavior the sf10 bench measures at scale."""
+the candidate-pair count, probe-key structure, and the monotone
+recall/cost behavior the sf10 bench measures at scale."""
 
 from __future__ import annotations
 
@@ -15,11 +15,9 @@ from australian_company_etl_spark.plans.similarity import (
     N_PLANES,
     adaptive_probe_budget,
     knn_candidate_stats,
-    knn_candidate_stats_probed,
-    knn_graph_lsh_planes,
     knn_graph_lsh_probed,
     knn_planes,
-    lsh_recall_probed,
+    lsh_recall,
 )
 
 
@@ -38,52 +36,48 @@ def test_budget_is_one_probe_per_added_plane():
     assert adaptive_probe_budget(30) == 22
 
 
-# ── zero probes ≡ the bare plan (the parity-twin identity) ──────────────────
+# ── the stats count exactly the pairs the graph join scores ───────────────
 
 
-def test_probed_graph_with_zero_probes_equals_bare(spark, sf_dir):
-    bare = knn_graph_lsh_planes(spark, sf_dir, knn_planes(10))
-    probed = knn_graph_lsh_probed(spark, sf_dir, knn_planes(10), 0)
-    assert sorted(map(tuple, bare.collect())) == sorted(map(tuple, probed.collect()))
+@pytest.mark.parametrize("n_probes", [0, 3])
+def test_candidate_stats_count_the_graph_join_pairs(spark, sf_dir, n_probes):
+    from pyspark.sql import functions as F
+
+    from australian_company_etl_spark.plans.similarity import _base, _lsh_keys
+
+    planes = knn_planes(10)
+    own, probes = _lsh_keys(_base(spark, sf_dir), planes, n_probes)
+    lhs = probes.select(F.col("vec_id").alias("src_id"), "bucket")
+    rhs = own.select(F.col("vec_id").alias("nbr_id"), "bucket")
+    joined = lhs.join(rhs, "bucket").filter(F.col("src_id") != F.col("nbr_id")).count()
+    s = knn_candidate_stats(spark, sf_dir, planes, n_probes)
+    assert s["cand_pairs"] == joined
+    assert s["n_planes"] == 10 and s["n_probes"] == n_probes
+    assert s["rows"] == own.count()
 
 
-def test_probed_stats_with_zero_probes_match_bare_stats(spark, sf_dir):
-    s = knn_candidate_stats(spark, sf_dir, knn_planes(10))
-    sp = knn_candidate_stats_probed(spark, sf_dir, knn_planes(10), 0)
-    assert sp["cand_pairs"] == s["cand_pairs"]
-    assert sp["rows"] == s["rows"]
-    assert sp["n_probes"] == 0
-
-
-# ── probe keys: distinct, own-bucket first, Hamming distance exactly 1 ──────
+# ── probe keys: distinct, own bucket included, Hamming distance exactly 1 ───
 
 
 def test_probe_keys_structure(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from australian_company_etl_spark.plans.similarity import (
-        _base,
-        _bucket_spark,
-        _keys_with_probes,
-    )
+    from australian_company_etl_spark.plans.similarity import _base, _lsh_keys
 
     planes = knn_planes(10)
-    rows = (
-        _base(spark, sf_dir)
-        .select(
-            _bucket_spark(F.col("e"), planes).alias("bucket"),
-            _keys_with_probes(F.col("e"), planes, 3).alias("keys"),
-        )
-        .limit(200)
-        .collect()
-    )
-    assert rows
-    for r in rows:
-        assert len(r["keys"]) == 4
-        assert r["keys"][0] == r["bucket"]  # own bucket leads
-        assert len(set(r["keys"])) == 4  # distinct → no pair dedup needed
-        for k in r["keys"][1:]:
-            assert bin(k ^ r["bucket"]).count("1") == 1  # Hamming-1 flips
+    # a partial budget, and all flips (full Hamming-1 multiprobe)
+    for n_probes in (3, len(planes)):
+        own, probes = _lsh_keys(_base(spark, sf_dir), planes, n_probes)
+        bucket = {r["vec_id"]: r["bucket"] for r in own.collect()}
+        keys: dict[int, list[int]] = {}
+        for r in probes.collect():
+            keys.setdefault(r["vec_id"], []).append(r["bucket"])
+        assert keys and set(keys) == set(bucket)
+        for vid, ks in keys.items():
+            assert len(ks) == 1 + n_probes
+            assert len(set(ks)) == 1 + n_probes  # distinct → no pair dedup needed
+            assert bucket[vid] in ks  # own bucket probed
+            for k in ks:
+                if k != bucket[vid]:
+                    assert bin(k ^ bucket[vid]).count("1") == 1  # Hamming-1 flips
 
 
 # ── recall is monotone in probes; cost grows ~1 bare term per probe ─────────
@@ -94,14 +88,14 @@ def test_recall_and_cost_monotone_in_probes(spark, sf_dir, m):
     planes = knn_planes(m)
     hits, costs = [], []
     for t in (0, 2, m):
-        hits.append(lsh_recall_probed(spark, sf_dir, planes, t)["hits"])
-        costs.append(knn_candidate_stats_probed(spark, sf_dir, planes, t)["cand_pairs"])
+        hits.append(lsh_recall(spark, sf_dir, planes, t)["hits"])
+        costs.append(knn_candidate_stats(spark, sf_dir, planes, t)["cand_pairs"])
     assert hits == sorted(hits)  # probes only add candidates
     assert costs == sorted(costs)
     # each probe's marginal cost is at most one bare term's worth + slack:
     # probed buckets are ordinary buckets, so t probes ≤ (1+t)× bare
     bare = costs[0]
-    assert costs[1] <= 3 * max(bare, 1) + 3 * knn_candidate_stats_probed(
+    assert costs[1] <= 3 * max(bare, 1) + 3 * knn_candidate_stats(
         spark, sf_dir, planes, 0
     )["rows"]
 
@@ -121,7 +115,7 @@ def test_probed_graph_edges_superset_of_bare(spark, sf_dir):
     planes = knn_planes(10)
     bare = {
         r["src_id"]: r["score"]
-        for r in knn_graph_lsh_planes(spark, sf_dir, planes)
+        for r in knn_graph_lsh_probed(spark, sf_dir, planes, 0)
         .filter("rank = 1")
         .collect()
     }
