@@ -124,6 +124,7 @@ def _run_one(spark: SparkSession, task: Task, out_dir: str) -> TaskResult:
     for attempt in range(1 + task.retries):
         res.attempts = attempt + 1
         try:
+            # direct reads (not read_table): they check a write, so they list afresh
             inputs = {d: spark.read.parquet(task_output_path(out_dir, d)) for d in task.deps}
             df = task.build(spark, inputs)
             df.write.mode("overwrite").parquet(path)

@@ -15,6 +15,13 @@ actually has:
    are the D1-D6 plan functions (plans/api.py) run against the snapshot —
    the SAME parameterized plans the correctness gate proves against the
    DuckDB oracles, so route semantics are gate-checked by construction.
+   Each snapshot table and index is resolved once per directory
+   generation (`sources.registry.read_table`): a warm request lists no
+   files and runs no schema-inference job, and an append, overwrite or
+   compaction swap moves the generation, so the next request re-resolves.
+   Reads that check a write (the publish verify, build counts, the
+   appenders' membership anti-joins and manifest counts, the compaction
+   and rebuild digests) stay direct `spark.read.parquet` calls.
 
 Scale posture: every route is a pushed-down point/top-k plan (keyset
 pagination D4, broadcast dim joins D1/D3, sort-limit top-k D5/D6), never
@@ -41,12 +48,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from australian_company_etl_spark.plans import api as api_plans
-from australian_company_etl_spark.sources.registry import load_tables, table_path
+from australian_company_etl_spark.sources.registry import load_tables, read_table, table_path
 
 #: tables the D-family routes read; the snapshot contains exactly these.
 SERVING_TABLES = ["customer", "nation", "part", "documents"]
 
 MAX_PAGE_SIZE = 1000  # serving-side cap: a page is a page, not an export
+#: every integer parameter and key is a Spark BIGINT
+BIGINT_MAX = 2**63 - 1
 
 FULLTEXT_INDEX = "fulltext_index"
 #: doc ledger beside the full-text index: one row per indexed doc_id. It —
@@ -250,6 +259,7 @@ def build_fulltext_index(
     ).parquet(path)
     ledger = docs.select("doc_id").distinct()
     ledger.write.mode("overwrite").parquet(table_path(out_dir, FULLTEXT_DOCS))
+    # direct read (not read_table): it checks a write, so it lists afresh
     n_docs = spark.read.parquet(table_path(out_dir, FULLTEXT_DOCS)).count()
     _write_fulltext_stats(spark, spark.read.parquet(path), out_dir, mode="overwrite")
     return {"rows": spark.read.parquet(path).count(), "n_docs": n_docs}
@@ -298,6 +308,7 @@ def build_fulltext_index_sharded(
     seg.repartitionByRange(n_files, "tok").sortWithinPartitions(
         "tok", "shard_id"
     ).write.mode("overwrite").parquet(path)
+    # direct read (not read_table): it checks a write, so it lists afresh
     n = spark.read.parquet(path).count()
     return {"rows": n, "shard_docs": shard_docs}
 
@@ -322,6 +333,7 @@ def append_documents_to_sharded(
     seg.repartitionByRange(2, "tok").sortWithinPartitions("tok", "shard_id").write.mode(
         "append"
     ).parquet(path)
+    # direct read (not read_table): it checks a write, so it lists afresh
     return {"segments_appended": spark.read.parquet(path).count()}
 
 
@@ -362,6 +374,7 @@ def append_documents_to_index(
         # like a pre-ledger snapshot and the postings backfill would lose
         # every token-less doc's membership
         heal_interrupted_compaction(ledger_path)
+        # direct read (not read_table): it checks a write, so it lists afresh
         if not os.path.exists(ledger_path):
             # pre-ledger snapshot (postings only, published before the
             # ledger existed): backfill it ONCE from the index's distinct
@@ -558,6 +571,7 @@ def build_trigram_index(
         .write.mode("overwrite")
         .parquet(path)
     )
+    # direct read (not read_table): it checks a write, so it lists afresh
     idx = spark.read.parquet(path)
     _write_trigram_stats(spark, idx, out_dir, mode="overwrite")
     return idx.count()
@@ -600,6 +614,7 @@ def _rebuild_trigram_stats(spark: SparkSession, data_dir: str) -> dict:
     meta row carries. Rebuilding from the index eliminates both.)"""
     import shutil
 
+    # direct read (not read_table): it checks a write, so it lists afresh
     idx = spark.read.parquet(table_path(data_dir, TRIGRAM_INDEX))
     parts = idx.select("p_partkey", "n_trgm").distinct()
     frames = (
@@ -653,6 +668,7 @@ def append_parts_to_trigram_index(
     new_parts = new_parts.dropDuplicates(["p_partkey"])
     with _index_lock(path):
         heal_interrupted_compaction(path)
+        # direct read (not read_table): it checks a write, so it lists afresh
         indexed = spark.read.parquet(path).select("p_partkey").distinct()
         fresh = new_parts.join(indexed, "p_partkey", "left_anti")
         n_new = fresh.count()
@@ -761,6 +777,7 @@ def compact_index(
             # point-in-time listing: the rewrite covers exactly these files,
             # whatever lands afterwards is handled by the swap-time re-diff
             listed = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        # direct read (not read_table): it checks a write, so it lists afresh
         src = spark.read.parquet(*listed)
         expected = _table_digest(src)
 
@@ -840,6 +857,7 @@ def _compact_fulltext_ledger(spark: SparkSession, data_dir: str, n_files: int) -
     if not os.path.isdir(ledger_path):
         return {"ledger": "absent"}
     files_before = len(glob.glob(os.path.join(ledger_path, "*.parquet")))
+    # direct read (not read_table): it checks a write, so it lists afresh
     src = spark.read.parquet(ledger_path)
     expected = _table_digest(src)
     tmp = ledger_path.rstrip("/") + ".compacting"
@@ -893,6 +911,7 @@ def _rebuild_fulltext_stats(spark: SparkSession, data_dir: str) -> dict:
     stats_path = table_path(data_dir, FULLTEXT_STATS)
     idx_path = table_path(data_dir, FULLTEXT_INDEX)
     tmp = stats_path.rstrip("/") + ".rebuilding"
+    # direct read (not read_table): it checks a write, so it lists afresh
     stats = spark.read.parquet(idx_path).groupBy("tok").agg(
         F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
     )
@@ -964,7 +983,7 @@ def fulltext_rank_maxdf(
     try:
         stat = {
             r["tok"]: (int(r["df"]), int(r["mtf"]))
-            for r in spark.read.parquet(stats_path)
+            for r in read_table(spark, data_dir, FULLTEXT_STATS)
             .filter(F.col("tok").isin(*terms))
             .groupBy("tok")
             .agg(F.sum("df_inc").alias("df"), F.max("max_tf").alias("mtf"))
@@ -996,7 +1015,7 @@ def fulltext_rank_maxdf(
         info["reason"] = f"candidate bound {cand_ub} > broadcast cap {MAXDF_BROADCAST_CAP}"
         return None, info
 
-    idx = spark.read.parquet(table_path(data_dir, FULLTEXT_INDEX))
+    idx = read_table(spark, data_dir, FULLTEXT_INDEX)
     # exact per-term df from the postings — the same counts the plain index
     # plan derives; ≤|terms| rows, footer-pruned scan, so collecting is free
     dfreq = {
@@ -1086,9 +1105,7 @@ def trigram_rank_from_index(
     q = _pg_trigrams([w for w in query.lower().split() if w])
     if not q:
         raise ValueError("query yields no trigrams")
-    idx = spark.read.parquet(table_path(data_dir, TRIGRAM_INDEX)).filter(
-        F.col("trgm").isin(*q)
-    )
+    idx = read_table(spark, data_dir, TRIGRAM_INDEX).filter(F.col("trgm").isin(*q))
     inter = F.count("*")
     union = F.col("n_trgm") + F.lit(len(q)) - inter
     scored = idx.groupBy("p_partkey", "p_name", "n_trgm").agg(
@@ -1190,7 +1207,7 @@ def trigram_rank_maxdf(
         info["reason"] = "no stats ledgers"
         return None, info
     try:
-        meta = spark.read.parquet(meta_path).agg(
+        meta = read_table(spark, data_dir, TRIGRAM_META).agg(
             F.sum("n_parts_inc").alias("n_parts"), F.min("min_n_trgm").alias("min_n")
         ).collect()[0]
         if meta["n_parts"] is None or meta["min_n"] is None:
@@ -1198,7 +1215,7 @@ def trigram_rank_maxdf(
         n_parts, min_n = int(meta["n_parts"]), int(meta["min_n"])
         dfs = {
             r["trgm"]: int(r["df"])
-            for r in spark.read.parquet(stats_path)
+            for r in read_table(spark, data_dir, TRIGRAM_STATS)
             .filter(F.col("trgm").isin(*q))
             .groupBy("trgm")
             .agg(F.sum("df_inc").alias("df"))
@@ -1238,7 +1255,7 @@ def trigram_rank_maxdf(
         info["reason"] = f"candidate bound {cand_ub} > broadcast cap {MAXDF_BROADCAST_CAP}"
         return None, info
 
-    idx = spark.read.parquet(table_path(data_dir, TRIGRAM_INDEX))
+    idx = read_table(spark, data_dir, TRIGRAM_INDEX)
     # computed twice (broadcast keys + final join), deliberately
     # unpersisted — see fulltext_rank_maxdf: the rare subtree is
     # ledger-capped and map-side cheap; persisting it measured 2× slower
@@ -1288,9 +1305,7 @@ def fulltext_rank_from_index(
     layout stay append-only), one map-side-combined per-doc aggregate,
     sort-limit top-k. ``n_docs`` comes from the snapshot manifest.
     Proven row-identical to the scan-based plan in tests."""
-    idx = spark.read.parquet(table_path(data_dir, FULLTEXT_INDEX)).filter(
-        F.col("tok").isin(*terms)
-    )
+    idx = read_table(spark, data_dir, FULLTEXT_INDEX).filter(F.col("tok").isin(*terms))
     return _rank_matched_postings(idx, topk, n_docs)
 
 
@@ -1341,9 +1356,7 @@ def fulltext_rank_from_sharded(
     shared code. Proven row-identical to `fulltext_rank_from_index` in
     tests, including on a hot-token corpus where one term spans many
     segments."""
-    seg = spark.read.parquet(table_path(data_dir, FULLTEXT_SHARDED)).filter(
-        F.col("tok").isin(*terms)
-    )
+    seg = read_table(spark, data_dir, FULLTEXT_SHARDED).filter(F.col("tok").isin(*terms))
     idx = seg.select(
         "tok", F.explode(F.arrays_zip("doc_ids", "tfs")).alias("p")
     ).select(
@@ -1378,6 +1391,7 @@ def snapshot_tables(
     for name, df in src.items():
         expected = _table_digest(df)
         df.write.mode("overwrite").parquet(table_path(out_dir, name))
+        # direct read (not read_table): it checks a write, so it lists afresh
         actual = _table_digest(spark.read.parquet(table_path(out_dir, name)))
         if actual != expected:
             raise RuntimeError(
@@ -1400,14 +1414,17 @@ def _rows_payload(df: DataFrame) -> dict:
 
 def _int_param(q: dict[str, str], name: str, default: int, lo: int | None = 1) -> int:
     """Parse an integer query param; non-integers AND out-of-range values
-    (e.g. limit=-1, k=0) raise ValueError → a 400 bad request, never a
-    500 from DataFrame.limit(-1)."""
+    (e.g. limit=-1, k=0, or anything outside the BIGINT range) raise
+    ValueError → a 400 bad request, never a 500 from DataFrame.limit(-1)
+    or from a literal Spark cannot hold."""
     raw = q.get(name)
     if raw is None:
         return default
     v = int(raw)
     if lo is not None and v < lo:
         raise ValueError(f"{name} must be >= {lo}, got {v}")
+    if not -BIGINT_MAX - 1 <= v <= BIGINT_MAX:
+        raise ValueError(f"{name} is outside the BIGINT range, got {v}")
     return v
 
 
@@ -1519,7 +1536,14 @@ class _Handler(BaseHTTPRequestHandler):
         spark, d = self.spark, self.data_dir
         m = _COMPANY_PATH.match(path)
         if m:
-            out = _rows_payload(api_plans.api_lookup_by_key(spark, d, key=int(m.group(1))))
+            key = int(m.group(1))
+            # a key past the BIGINT maximum names no company (every key
+            # column is BIGINT), and Spark could not hold it as a literal
+            out = (
+                _rows_payload(api_plans.api_lookup_by_key(spark, d, key=key))
+                if key <= BIGINT_MAX
+                else {"n": 0}
+            )
             if out["n"] == 0:
                 # reference parity on the BODY (main.py:37); the 404 status
                 # is a deliberate deviation — the reference FastAPI service

@@ -379,10 +379,24 @@ def test_nonpositive_params_are_400_not_500(server):
         "/search?q=quick&k=0",
         "/fuzzy?q=widgit&k=-2",
         "/search?q=quick&k=abc",
+        # outside the BIGINT range: a 400, not a NumberFormatException 500
+        "/companies?after=99999999999999999999",
+        "/companies?after=-99999999999999999999",
+        "/companies?limit=9223372036854775808",
+        f"/companies/search?q={api_plans.SEARCH_PATTERN}&after=99999999999999999999",
+        f"/companies/search?q={api_plans.SEARCH_PATTERN}&after=-99999999999999999999",
+        f"/companies/by_state?state={api_plans.STATE_NAME}&after=99999999999999999999",
+        f"/companies/by_state?state={api_plans.STATE_NAME}&after=-99999999999999999999",
     ):
         status, body = _get(server, path)
         assert status == 400, path
         assert "bad request" in body["error"]
+    # a key past the BIGINT maximum names no company
+    for key in ("9223372036854775808", "99999999999999999999"):
+        assert _get(server, f"/companies/{key}") == (404, {"error": "Company not found"})
+    # the range edges themselves are served
+    assert _get(server, "/companies?after=9223372036854775807")[0] == 200
+    assert _get(server, "/companies?after=-9223372036854775808")[0] == 200
 
 
 def _build_half_corpus_index(spark, tmp_path):
@@ -1900,3 +1914,190 @@ def test_rebuild_crash_leaves_stat_ledgers_absent_not_stale(spark, tmp_path, mon
         api.build_fulltext_index(spark, docs_dir, ft)
     monkeypatch.undo()
     assert not os.path.exists(table_path(ft, api.FULLTEXT_STATS))
+
+
+def _serve(spark, d):
+    from australian_company_etl_spark.serving import http_api as api
+
+    srv = api.make_server(spark, d)
+    api.serve_in_thread(srv)
+    return srv, f"http://127.0.0.1:{srv.server_address[1]}"
+
+
+def test_fulltext_routes_follow_appends_and_compaction(spark, tmp_path):
+    """The server resolves each index once per directory generation: an
+    append (files renamed into the directory) and a compaction (a new
+    directory swapped in) must both reach the very next request."""
+    from australian_company_etl_spark.serving import http_api as api
+
+    _corpus, d = _crafted_ft_corpus(spark, tmp_path)
+    srv, base = _serve(spark, d)
+    try:
+        q = "/search?q=golden+uid17&k=2"
+        status, body = _get(base, q)
+        assert status == 200 and body["rows"][0]["doc_id"] == 17
+        api.append_documents_to_index(
+            spark,
+            spark.createDataFrame(
+                [(500, "golden golden golden uid17 uid17")], "doc_id bigint, text string"
+            ),
+            d,
+        )
+        _, body = _get(base, q)
+        assert [r["doc_id"] for r in body["rows"]] == [500, 17]
+        api.append_documents_to_index(
+            spark,
+            spark.createDataFrame(
+                [(501, "golden golden golden golden uid17 uid17 uid17")],
+                "doc_id bigint, text string",
+            ),
+            d,
+        )
+        _, appended = _get(base, q)
+        assert [r["doc_id"] for r in appended["rows"]] == [501, 500]
+        api.compact_index(spark, d, api.FULLTEXT_INDEX, "tok", n_files=2)
+        assert _get(base, q) == (200, appended)
+        assert _get(base, q + "&maxdf=0") == (200, appended)
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_fuzzy_routes_follow_appends_and_compaction(spark, tmp_path):
+    """Trigram twin of the fulltext case: the index and both probe-stat
+    ledgers are re-resolved after each append and after compaction."""
+    import json
+    import os
+
+    from australian_company_etl_spark.serving import http_api as api
+    from australian_company_etl_spark.sources.registry import table_path
+
+    _corpus, d = _crafted_trgm_corpus(spark, tmp_path)
+    rows = spark.read.parquet(table_path(d, api.TRIGRAM_INDEX)).count()
+    with open(os.path.join(d, "_SNAPSHOT.json"), "w") as f:
+        json.dump({api.TRIGRAM_INDEX: {"rows": rows}}, f)
+    name = "golden harvest premium quality assurance item uid77"
+    srv, base = _serve(spark, d)
+    try:
+        q = "/fuzzy?q=" + name.replace(" ", "+") + "&k=2"
+        status, body = _get(base, q)
+        assert status == 200 and body["rows"][0]["sim"] < 1
+        api.append_parts_to_trigram_index(
+            spark, spark.createDataFrame([(500, name)], "p_partkey bigint, p_name string"), d
+        )
+        _, body = _get(base, q)
+        assert body["rows"][0] == {"p_partkey": 500, "p_name": name, "sim": 1.0}
+        api.append_parts_to_trigram_index(
+            spark, spark.createDataFrame([(450, name)], "p_partkey bigint, p_name string"), d
+        )
+        _, appended = _get(base, q)
+        assert [(r["p_partkey"], r["sim"]) for r in appended["rows"]] == [(450, 1.0), (500, 1.0)]
+        api.compact_index(spark, d, api.TRIGRAM_INDEX, "trgm", n_files=2)
+        assert _get(base, q) == (200, appended)
+        assert _get(base, q + "&maxdf=0") == (200, appended)
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_load_tables_follows_overwrite_and_missing_path_raises(spark, tmp_path):
+    """The registry memo: an unchanged table resolves to the same frame, an
+    overwritten one to its new rows, and a missing path still raises the
+    AnalysisException a direct read raises."""
+    from pyspark.errors import AnalysisException
+
+    from australian_company_etl_spark.sources.registry import load_tables, read_table
+
+    d = str(tmp_path)
+    spark.createDataFrame([(1, "a"), (2, "b")], "doc_id bigint, text string").write.parquet(
+        d + "/documents.parquet"
+    )
+    first = load_tables(spark, d, ["documents"])["documents"]
+    assert sorted(r["doc_id"] for r in first.collect()) == [1, 2]
+    assert read_table(spark, d, "documents") is read_table(spark, d, "documents")
+    spark.createDataFrame([(7, "x")], "doc_id bigint, text string").write.mode(
+        "overwrite"
+    ).parquet(d + "/documents.parquet")
+    again = load_tables(spark, d, ["documents"])["documents"]
+    assert [r["doc_id"] for r in again.collect()] == [7]
+    with pytest.raises(AnalysisException):
+        load_tables(spark, d, ["nation"])
+
+
+def test_concurrent_readers_resolve_each_table_once(spark, monkeypatch):
+    """More reader threads than cores, switching as often as the
+    interpreter allows: each table generation is read exactly once and
+    every thread gets that one frame (a check-then-act race would read a
+    table twice and hand threads different frames)."""
+    import sys
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from australian_company_etl_spark.sources.registry import read_table
+
+    fresh = spark.newSession()  # an empty memo, shared with no other test
+    names = ["region", "nation", "supplier"]
+    reads = []
+    real = DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        reads.append(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    got = [[] for _ in range(12)]
+    threads = [
+        threading.Thread(
+            target=lambda out=out: out.extend(read_table(fresh, SF_DIR, n) for n in names * 5)
+        )
+        for out in got
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(reads) == len(names)
+    first = got[0][: len(names)]
+    assert all(len(out) == 5 * len(names) for out in got)
+    assert all(df is first[i % len(names)] for out in got for i, df in enumerate(out))
+
+
+def test_warm_requests_resolve_no_table(server, monkeypatch):
+    """After one pass over every route, a second pass lists no table
+    directory: each snapshot table and index resolves once per directory
+    generation, not once per request."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    paths = [
+        f"/companies/{api_plans.LOOKUP_KEY}",
+        f"/companies/search?q={api_plans.SEARCH_PATTERN}&limit=5",
+        f"/companies/by_state?state={api_plans.STATE_NAME}",
+        "/companies?after=3&limit=5",
+        "/search?q=the+quick&k=5",
+        "/search?q=the+quick&k=5&maxdf=0",
+        "/search?q=the+quick&k=5&shard=1",
+        "/search?q=the+quick&k=5&scan=1",
+        "/fuzzy?q=widgit&k=5",
+        "/fuzzy?q=widgit&k=5&maxdf=0",
+        "/fuzzy?q=widgit&k=5&scan=1",
+        "/health",
+    ]
+    first = [_get(server, p) for p in paths]
+    assert all(status == 200 for status, _ in first), first
+    reads = []
+    real = DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        reads.append(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    assert [_get(server, p) for p in paths] == first
+    assert reads == []
