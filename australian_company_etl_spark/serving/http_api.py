@@ -22,6 +22,21 @@ actually has:
    Reads that check a write (the publish verify, build counts, the
    appenders' membership anti-joins and manifest counts, the compaction
    and rebuild digests) stay direct `spark.read.parquet` calls.
+   `/search` and `/fuzzy` share one sequence (`_Handler._ranked`): the
+   exact max-df skip, then the index probe, then the corpus scan.
+3. **Maintain**: the posting indexes (flat full-text, its sharded
+   segments, trigram) are append-only, and each maintenance step exists
+   once for all of them. The sharded segments are cut from the flat
+   postings, both at build and in `append_documents_to_index`, so the two
+   layouts cannot drift. Each index maps a postings frame to its
+   probe-stat ledgers once (`_LEDGERS`); builds write them in overwrite
+   mode, appends in append mode ahead of the postings (`_write_ledgers`),
+   and compaction rebuilds them (`_rebuild_ledgers`). `compact_index`
+   rewrites an index, and the fulltext doc ledger, through one
+   digest-verified two-rename swap (`_verified_swap`). Both max-df probes
+   share one hot/rare split, one broadcast semi-join and one strict
+   k-th-row guard (`_hot_rare`, `_rare_first_topk`) — the bound-guarded,
+   partition-local top-k of REPOSE (ICDE 2021).
 
 Scale posture: every route is a pushed-down point/top-k plan (keyset
 pagination D4, broadcast dim joins D1/D3, sort-limit top-k D5/D6), never
@@ -36,6 +51,7 @@ protocol shim, not the engine.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import re
@@ -191,6 +207,13 @@ def _doc_postings(docs: DataFrame) -> DataFrame:
     return toks.groupBy("tok", "doc_id").agg(F.count("*").alias("tf"))
 
 
+def _write_sorted(df: DataFrame, path: str, keys: tuple[str, ...], n_files: int, mode: str) -> None:
+    """Range-partition ``df`` on its term key into ``n_files`` files sorted
+    on ``keys``: the layout whose parquet footer stats prune a probe's scan
+    to the files its terms touch."""
+    df.repartitionByRange(n_files, keys[0]).sortWithinPartitions(*keys).write.mode(mode).parquet(path)
+
+
 def _drop_ledgers_before_rebuild(data_dir: str, names: tuple[str, ...]) -> None:
     """Rename-away + delete derived ledger directories BEFORE a build
     overwrites the postings they describe (ADVICE r7). The build paths used
@@ -254,15 +277,14 @@ def build_fulltext_index(
     # which is strictly better than a stale ledger asserting membership
     # for documents the new postings no longer contain.
     _drop_ledgers_before_rebuild(out_dir, (FULLTEXT_STATS, FULLTEXT_DOCS))
-    tf.repartitionByRange(n_files, "tok").sortWithinPartitions("tok").write.mode(
-        "overwrite"
-    ).parquet(path)
+    _write_sorted(tf, path, ("tok",), n_files, "overwrite")
     ledger = docs.select("doc_id").distinct()
     ledger.write.mode("overwrite").parquet(table_path(out_dir, FULLTEXT_DOCS))
-    # direct read (not read_table): it checks a write, so it lists afresh
+    # direct reads (not read_table): they check a write, so they list afresh
     n_docs = spark.read.parquet(table_path(out_dir, FULLTEXT_DOCS)).count()
-    _write_fulltext_stats(spark, spark.read.parquet(path), out_dir, mode="overwrite")
-    return {"rows": spark.read.parquet(path).count(), "n_docs": n_docs}
+    idx = spark.read.parquet(path)
+    _write_ledgers(FULLTEXT_INDEX, idx, out_dir, mode="overwrite")
+    return {"rows": idx.count(), "n_docs": n_docs}
 
 
 def _shard_segments(tf: DataFrame, shard_docs: int) -> DataFrame:
@@ -288,60 +310,39 @@ def _shard_segments(tf: DataFrame, shard_docs: int) -> DataFrame:
 
 def build_fulltext_index_sharded(
     spark: SparkSession,
-    sf_dir: str,
     out_dir: str,
     shard_docs: int = FT_SHARD_DOCS,
     n_files: int = 8,
 ) -> dict:
-    """Publish the SHARDED full-text index (VERDICT r11 task 7 — the H12
-    docstring's past-1e6-docs/token form, runnable): posting SEGMENTS per
-    (tok, shard) instead of one row per (tok, doc). Same information as
-    the flat index — `/search?shard=1` serves from it through the
-    identical scoring plan (segments exploded back to postings at probe
-    time, term filter still pushed into the tok-sorted scan) and is proven
-    row-identical to the flat probe in tests on a crafted hot-token
-    corpus. At 100 TB each segment row is one bounded row-group write,
-    and an ingest batch's segments append without touching existing rows."""
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    seg = _shard_segments(_doc_postings(docs), shard_docs)
+    """Publish the SHARDED full-text index (the H12 docstring's
+    past-1e6-docs/token form, runnable): posting SEGMENTS per (tok, shard)
+    cut from the flat index just published in ``out_dir`` — no second
+    tokenization, and by construction the same postings. `/search?shard=1`
+    serves from it through the identical scoring plan (segments exploded
+    back to postings at probe time, term filter still pushed into the
+    tok-sorted scan). At 100 TB each segment row is one bounded row-group
+    write, and `append_documents_to_index` appends an ingest batch's
+    segments without touching existing rows; the width it cuts them at is
+    the ``shard_docs`` this build records in the manifest."""
     path = table_path(out_dir, FULLTEXT_SHARDED)
-    seg.repartitionByRange(n_files, "tok").sortWithinPartitions(
-        "tok", "shard_id"
-    ).write.mode("overwrite").parquet(path)
-    # direct read (not read_table): it checks a write, so it lists afresh
-    n = spark.read.parquet(path).count()
-    return {"rows": n, "shard_docs": shard_docs}
+    # direct reads (not read_table): the flat postings were just written,
+    # and the count checks this write, so both list afresh
+    flat = spark.read.parquet(table_path(out_dir, FULLTEXT_INDEX))
+    _write_sorted(_shard_segments(flat, shard_docs), path, ("tok", "shard_id"), n_files, "overwrite")
+    return {"rows": spark.read.parquet(path).count(), "shard_docs": shard_docs}
 
 
-def append_documents_to_sharded(
-    spark: SparkSession, new_docs: DataFrame, data_dir: str, shard_docs: int | None = None
-) -> dict:
-    """Append an ingest batch's posting segments to the sharded index —
-    the library-variant feed into the serving append path: new (tok,
-    shard) segment rows are ADDED (a batch sharing a shard with existing
-    rows yields a second additive segment row — the probe unions them, so
-    df and scores stay exact without any read-modify-write). Membership
-    dedup against the doc ledger is the flat append path's job; this
-    writer assumes ``new_docs`` is already the fresh set (call it from
-    the same maintenance batch, after the ledger anti-join)."""
-    path = table_path(data_dir, FULLTEXT_SHARDED)
-    if shard_docs is None:
-        shard_docs = FT_SHARD_DOCS
-    seg = _shard_segments(_doc_postings(new_docs), shard_docs)
-    if seg.isEmpty():
-        return {"segments_appended": 0}
-    seg.repartitionByRange(2, "tok").sortWithinPartitions("tok", "shard_id").write.mode(
-        "append"
-    ).parquet(path)
-    # direct read (not read_table): it checks a write, so it lists afresh
-    return {"segments_appended": spark.read.parquet(path).count()}
+def _read_manifest(data_dir: str) -> dict:
+    with open(os.path.join(data_dir, "_SNAPSHOT.json")) as f:
+        return json.load(f)
 
 
 def append_documents_to_index(
     spark: SparkSession, new_docs: DataFrame, data_dir: str
 ) -> dict:
     """Incremental index maintenance: append the NEW documents' postings
-    and bump the manifest's n_docs — existing rows are never rewritten.
+    (and, where the snapshot has them, their shard segments) and bump the
+    manifest's n_docs — existing rows are never rewritten.
     First-wins at BOTH granularities (the J8 upsert discipline): duplicate
     doc_ids WITHIN the batch collapse to one row before anything else, and
     doc_ids already in the ledger are anti-joined away — so a retried or
@@ -351,13 +352,16 @@ def append_documents_to_index(
     so its re-delivery is a no-op and n_docs (idf's denominator) stays the
     exact ledger count.
 
-    CRASH SAFETY: the postings append and the ledger append are two
-    parquet writes with no shared transaction, so each write's freshness
-    is decided against its OWN table — postings against the posting rows,
-    ledger against the ledger. A crash between the two (the exact window
-    an at-least-once foreachBatch replay re-enters) then heals instead of
-    corrupting: the replay finds the postings already present (skips
-    them, no doubled tf) and appends only the missing ledger rows.
+    CRASH SAFETY: the postings append, the segment append and the ledger
+    append are parquet writes with no shared transaction, so each write's
+    freshness is decided against its OWN table — postings against the
+    posting rows, segments against the segments, ledger against the
+    ledger — and they run in that order. A crash between any two (the
+    exact window an at-least-once foreachBatch replay re-enters) then
+    heals instead of corrupting: the replay skips what is already present
+    (no doubled tf) and appends only what is missing. The segments are
+    cut from the postings already in the index, so each document is
+    tokenized once, at the width the manifest records.
 
     Holds the index lock for the whole read-membership → write → manifest
     window: without it a concurrent `compact_index` swap could replace the
@@ -366,6 +370,7 @@ def append_documents_to_index(
     Returns what was appended (ledger granularity)."""
     path = table_path(data_dir, FULLTEXT_INDEX)
     ledger_path = table_path(data_dir, FULLTEXT_DOCS)
+    seg_path = table_path(data_dir, FULLTEXT_SHARDED)
     new_docs = new_docs.dropDuplicates(["doc_id"])
     with _index_lock(path):
         heal_interrupted_compaction(path)
@@ -374,6 +379,9 @@ def append_documents_to_index(
         # like a pre-ledger snapshot and the postings backfill would lose
         # every token-less doc's membership
         heal_interrupted_compaction(ledger_path)
+        # segments are maintained only for snapshots that publish them
+        shard_docs = _read_manifest(data_dir).get(FULLTEXT_SHARDED, {}).get("shard_docs")
+        sharded = shard_docs is not None and os.path.isdir(seg_path)
         # direct read (not read_table): it checks a write, so it lists afresh
         if not os.path.exists(ledger_path):
             # pre-ledger snapshot (postings only, published before the
@@ -394,36 +402,24 @@ def append_documents_to_index(
             # scans the index at all. At 100 TB a Bloom filter (M3) fronts
             # this probe, same semantics.
             in_postings = spark.read.parquet(path).select("doc_id").distinct()
-            postings_new = _doc_postings(fresh.join(in_postings, "doc_id", "left_anti"))
-            # local persist (maintenance job, not the query-scoped tracker):
-            # the batch postings feed up to two writes, and the stats ledger
-            # must describe the SAME rows as the postings append — and the
-            # postings append invalidates every cached plan that scans the
-            # index path, including this batch's anti-join.
-            postings_new = postings_new.persist()
-            try:
-                if not postings_new.isEmpty():  # token-less docs append no postings
-                    # probe-stat ledger maintained only for snapshots that
-                    # have one (older snapshots keep working; the max-df
-                    # probe just declines there). Written BEFORE the
-                    # postings: a crash in between leaves df/max_tf
-                    # inflated, which the probe's bound tolerates — the
-                    # reverse order could leave max_tf UNDER the indexed
-                    # max, breaking the exactness guard.
-                    if os.path.exists(table_path(data_dir, FULLTEXT_STATS)):
-                        _write_fulltext_stats(spark, postings_new, data_dir, mode="append")
-                    postings_new.repartitionByRange(2, "tok").sortWithinPartitions(
-                        "tok"
-                    ).write.mode("append").parquet(path)
-            finally:
-                postings_new.unpersist()
+            fresh_postings = fresh.join(in_postings, "doc_id", "left_anti")
+            _append_postings(FULLTEXT_INDEX, _doc_postings(fresh_postings), data_dir)
+            if sharded:
+                in_segments = spark.read.parquet(seg_path).select(
+                    F.explode("doc_ids").alias("doc_id")
+                )
+                missing = fresh.select("doc_id").join(in_segments, "doc_id", "left_anti")
+                batch = spark.read.parquet(path).join(missing, "doc_id", "left_semi")
+                if not batch.isEmpty():
+                    segments = _shard_segments(batch, shard_docs)
+                    _write_sorted(segments, seg_path, ("tok", "shard_id"), 2, "append")
             fresh.select("doc_id").write.mode("append").parquet(ledger_path)
-        manifest_path = os.path.join(data_dir, "_SNAPSHOT.json")
-        with open(manifest_path) as f:
-            manifest = json.load(f)
+        manifest = _read_manifest(data_dir)
         manifest[FULLTEXT_INDEX]["n_docs"] = spark.read.parquet(ledger_path).count()
         manifest[FULLTEXT_INDEX]["rows"] = spark.read.parquet(path).count()
-        _write_manifest(manifest_path, manifest)
+        if sharded:
+            manifest[FULLTEXT_SHARDED]["rows"] = spark.read.parquet(seg_path).count()
+        _write_manifest(os.path.join(data_dir, "_SNAPSHOT.json"), manifest)
     return {"docs_appended": n_new, "n_docs": manifest[FULLTEXT_INDEX]["n_docs"]}
 
 
@@ -552,100 +548,121 @@ def build_trigram_index(
     everything D6's Jaccard ranking needs. trgm-sorted layout for the
     same row-group term pruning as the full-text index. Returns the
     posting-row count."""
-    from australian_company_etl_spark.plans.api import _TRGM_EXPR
-
-    part = load_tables(spark, sf_dir, ["part"])["part"]
-    trg = part.select(
-        "p_partkey",
-        "p_name",
-        F.explode(F.expr(_TRGM_EXPR.format(c="p_name"))).alias("trgm"),
-    ).withColumn("n_trgm", F.count("*").over(Window.partitionBy("p_partkey")))
+    trg = _part_postings(load_tables(spark, sf_dir, ["part"])["part"])
     path = table_path(out_dir, TRIGRAM_INDEX)
     # drop the probe-stat ledgers BEFORE overwriting the postings they
     # describe — a crash then leaves them absent (probe declines), never
     # stale over the new corpus (see _drop_ledgers_before_rebuild)
     _drop_ledgers_before_rebuild(out_dir, (TRIGRAM_STATS, TRIGRAM_META))
-    (
-        trg.repartitionByRange(n_files, "trgm")
-        .sortWithinPartitions("trgm")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _write_sorted(trg, path, ("trgm",), n_files, "overwrite")
     # direct read (not read_table): it checks a write, so it lists afresh
     idx = spark.read.parquet(path)
-    _write_trigram_stats(spark, idx, out_dir, mode="overwrite")
+    _write_ledgers(TRIGRAM_INDEX, idx, out_dir, mode="overwrite")
     return idx.count()
 
 
-def _write_trigram_meta(spark: SparkSession, postings: DataFrame, data_dir: str, mode: str) -> None:
-    """One (n_parts_inc, min_n_trgm) ledger row for a postings batch."""
-    meta = postings.select("p_partkey", "n_trgm").distinct().agg(
-        F.count("*").alias("n_parts_inc"),
-        F.min("n_trgm").alias("min_n_trgm"),
-    )
-    meta.coalesce(1).write.mode(mode).parquet(table_path(data_dir, TRIGRAM_META))
+def _part_postings(parts: DataFrame) -> DataFrame:
+    from australian_company_etl_spark.plans.api import _TRGM_EXPR
+
+    trg = parts.select("p_partkey", "p_name", F.explode(F.expr(_TRGM_EXPR.format(c="p_name"))).alias("trgm"))
+    return trg.withColumn("n_trgm", F.count("*").over(Window.partitionBy("p_partkey")))
 
 
-def _write_trigram_df_stats(spark: SparkSession, postings: DataFrame, data_dir: str, mode: str) -> None:
-    """(trgm, df_inc) ledger rows for a postings batch."""
-    stats = postings.groupBy("trgm").agg(F.count("*").alias("df_inc"))
-    stats.coalesce(1).write.mode(mode).parquet(table_path(data_dir, TRIGRAM_STATS))
+def _append_postings(index: str, postings: DataFrame, data_dir: str) -> None:
+    """Append an ingest batch's fresh postings to ``index``, its probe-stat
+    ledger rows first. The ledgers go BEFORE the postings for two reasons:
+    (a) soundness — a crash in between leaves df/max_tf/n_parts inflated
+    and min_n_trgm ≤ the true min, which the probes' bounds tolerate (the
+    df split only picks WHICH terms probe), while the reverse order could
+    leave max_tf UNDER the indexed max; (b) mechanics — appending to the
+    postings path invalidates every cached plan that scans it, including
+    this batch (its anti-join reads the index), so a ledger write issued
+    afterwards would recompute against the post-append index and see an
+    empty batch. The local persist (a maintenance job, not the
+    query-scoped tracker) makes the ledgers describe the SAME rows as the
+    postings. A batch can yield ZERO postings (token-less documents, part
+    names without alphanumerics): then nothing is written — a zero-row
+    batch's meta agg would still emit one (0, NULL) row, and NULL
+    min_n_trgm rows poison every later ledger read."""
+    postings = postings.persist()
+    try:
+        if not postings.isEmpty():
+            _write_ledgers(index, postings, data_dir, mode="append")
+            _write_sorted(postings, table_path(data_dir, index), (_TERM_KEY[index],), 2, "append")
+    finally:
+        postings.unpersist()
 
 
-def _rebuild_trigram_stats(spark: SparkSession, data_dir: str) -> dict:
-    """Compaction-time wholesale REBUILD of the trigram probe-stat ledgers
-    from the (just-compacted) postings index — every ledger value is
-    derivable from the postings (df = count per trgm, n_parts = distinct
-    parts, min_n_trgm = min over the stored per-part counts), so the
-    rebuild is both the fold and the heal: torn, absent, and
-    crash-inflated ledger states all converge to EXACT values here, and
-    pre-stats snapshots gain the ledgers at their first compaction (the
-    migration path), exactly like `_rebuild_fulltext_stats`. Caller holds
-    the index lock (no concurrent appender can write ledger rows the swap
-    below would drop). The per-ledger swap is write-tmp + rmtree + rename:
-    a crash between them leaves that ledger ABSENT, which the probe treats
-    as decline and appenders skip — so a READABLE ledger can never
-    silently miss a batch. (The previous driver-side fold rewrote the
-    ledgers IN PLACE with mode-overwrite, whose crash window leaves a
-    present-but-torn dir that later appends keep feeding: min_n_trgm would
-    then read as the minimum over post-crash batches only — ABOVE the true
-    corpus minimum — silently breaking the max-df guard's soundness. It
-    also raised TypeError on the NULL min_n_trgm a zero-trigram batch's
-    meta row carries. Rebuilding from the index eliminates both.)"""
+def _fulltext_ledgers(postings: DataFrame) -> dict[str, DataFrame]:
+    """(tok, df_inc, max_tf) probe-stat rows of a postings frame (see
+    FULLTEXT_STATS). df is the SUM of a token's rows, max_tf the MAX —
+    both merge-monotone, so append-only maintenance is exact modulo the
+    crash-inflation the probe's bound tolerates."""
+    return {
+        FULLTEXT_STATS: postings.groupBy("tok").agg(
+            F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
+        )
+    }
+
+
+def _trigram_ledgers(postings: DataFrame) -> dict[str, DataFrame]:
+    """One (n_parts_inc, min_n_trgm) row and the (trgm, df_inc) rows of a
+    postings frame (see TRIGRAM_STATS/TRIGRAM_META)."""
+    return {
+        TRIGRAM_META: postings.select("p_partkey", "n_trgm")
+        .distinct()
+        .agg(F.count("*").alias("n_parts_inc"), F.min("n_trgm").alias("min_n_trgm")),
+        TRIGRAM_STATS: postings.groupBy("trgm").agg(F.count("*").alias("df_inc")),
+    }
+
+
+#: each posting index's probe-stat ledger builder and term sort key
+_LEDGERS = {FULLTEXT_INDEX: _fulltext_ledgers, TRIGRAM_INDEX: _trigram_ledgers}
+_TERM_KEY = {FULLTEXT_INDEX: "tok", TRIGRAM_INDEX: "trgm"}
+
+
+def _write_ledgers(index: str, postings: DataFrame, data_dir: str, mode: str) -> None:
+    """Write the probe-stat ledger rows describing ``postings``: mode
+    overwrite at build time, mode append ahead of each postings append.
+    An append maintains the ledgers only where all of them exist (older
+    snapshots keep working; the max-df probe just declines there), so a
+    READABLE ledger never misses a batch."""
+    frames = _LEDGERS[index](postings)
+    if mode == "append" and not all(os.path.isdir(table_path(data_dir, n)) for n in frames):
+        return
+    for name, frame in frames.items():
+        frame.coalesce(1).write.mode(mode).parquet(table_path(data_dir, name))
+
+
+def _rebuild_ledgers(spark: SparkSession, data_dir: str, index: str) -> dict:
+    """Compaction-time wholesale REBUILD of an index's probe-stat ledgers
+    from the (just-compacted) postings — every ledger value is derivable
+    from them, so the rebuild is both the fold and the heal: torn, absent
+    and crash-inflated ledger states all converge to EXACT values here,
+    and pre-stats snapshots gain the ledgers at their first compaction
+    (the migration path). Caller holds the index lock, so no concurrent
+    appender can write ledger rows the swap below would drop. The
+    per-ledger swap is write-tmp + rmtree + rename: a crash between them
+    leaves that ledger ABSENT, which the probe treats as decline and
+    appenders skip — so a readable ledger can never silently miss a batch
+    (the soundness invariants: ledger max_tf ≥ every indexed tf, ledger
+    min_n_trgm ≤ every indexed part's count). An in-place overwrite would
+    leave a present-but-torn ledger that later appends keep feeding.
+    Returns {ledger: rows}."""
     import shutil
 
-    # direct read (not read_table): it checks a write, so it lists afresh
-    idx = spark.read.parquet(table_path(data_dir, TRIGRAM_INDEX))
-    parts = idx.select("p_partkey", "n_trgm").distinct()
-    frames = (
-        (TRIGRAM_STATS, idx.groupBy("trgm").agg(F.count("*").alias("df_inc"))),
-        (
-            TRIGRAM_META,
-            parts.agg(
-                F.count("*").alias("n_parts_inc"),
-                F.min("n_trgm").alias("min_n_trgm"),
-            ),
-        ),
-    )
+    # direct reads (not read_table): they check a write, so they list afresh
+    idx = spark.read.parquet(table_path(data_dir, index))
     out = {}
-    for name, df in frames:
+    for name, frame in _LEDGERS[index](idx).items():
         path = table_path(data_dir, name)
         tmp = path.rstrip("/") + ".rebuilding"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
+        frame.coalesce(1).write.mode("overwrite").parquet(tmp)
+        out[name] = spark.read.parquet(tmp).count()
         if os.path.exists(path):
             shutil.rmtree(path)
         os.rename(tmp, path)
-        out[name] = n
     return out
-
-
-def _write_trigram_stats(spark: SparkSession, postings: DataFrame, data_dir: str, mode: str) -> None:
-    """Publish the max-df probe statistics for a postings batch (see
-    TRIGRAM_STATS/TRIGRAM_META). Build-time path; the append path issues
-    the same two writes before its postings append."""
-    _write_trigram_meta(spark, postings, data_dir, mode)
-    _write_trigram_df_stats(spark, postings, data_dir, mode)
 
 
 def append_parts_to_trigram_index(
@@ -662,8 +679,6 @@ def append_parts_to_trigram_index(
     inflating |∩| at probe time). Same lock discipline as the full-text
     appender: membership read → write → manifest under `_index_lock`, so
     a concurrent compaction swap cannot strand the appended files."""
-    from australian_company_etl_spark.plans.api import _TRGM_EXPR
-
     path = table_path(data_dir, TRIGRAM_INDEX)
     new_parts = new_parts.dropDuplicates(["p_partkey"])
     with _index_lock(path):
@@ -673,60 +688,62 @@ def append_parts_to_trigram_index(
         fresh = new_parts.join(indexed, "p_partkey", "left_anti")
         n_new = fresh.count()
         if n_new:
-            trg = fresh.select(
-                "p_partkey",
-                "p_name",
-                F.explode(F.expr(_TRGM_EXPR.format(c="p_name"))).alias("trgm"),
-            ).withColumn("n_trgm", F.count("*").over(Window.partitionBy("p_partkey")))
-            # local persist (not the query-scoped tracker — this is a
-            # maintenance job): the batch postings feed up to three writes,
-            # and the meta/stats ledgers must describe the SAME rows as the
-            # postings append
-            trg = trg.persist()
-            try:
-                # a batch can yield ZERO postings (every fresh name empty of
-                # alphanumerics): such parts never enter the index, and the
-                # ledger writes must be skipped with the postings — a
-                # zero-row batch's meta agg still emits one (0, NULL) row,
-                # and NULL min_n_trgm rows poison every later ledger read
-                if not trg.isEmpty():
-                    # probe-stat ledgers are maintained only for snapshots
-                    # that have them (older postings-only snapshots keep
-                    # working; the max-df probe just falls back there). BOTH
-                    # ledgers are written BEFORE the postings: (a) soundness
-                    # — a crash then leaves min_n_trgm ≤ the true min and
-                    # df/n_parts inflated, and neither inflated value can
-                    # break exactness (the df split only picks WHICH
-                    # trigrams probe; the guard uses min_n) — and (b)
-                    # mechanics — appending to the postings path invalidates
-                    # every cached plan that scans it, including this batch
-                    # (its anti-join reads the index), so a ledger write
-                    # issued afterwards would recompute against the
-                    # post-append index and see an empty batch.
-                    has_stats = os.path.exists(
-                        table_path(data_dir, TRIGRAM_STATS)
-                    ) and os.path.exists(table_path(data_dir, TRIGRAM_META))
-                    if has_stats:
-                        _write_trigram_meta(spark, trg, data_dir, mode="append")
-                        _write_trigram_df_stats(spark, trg, data_dir, mode="append")
-                    trg.repartitionByRange(2, "trgm").sortWithinPartitions(
-                        "trgm"
-                    ).write.mode("append").parquet(path)
-            finally:
-                trg.unpersist()
-        manifest_path = os.path.join(data_dir, "_SNAPSHOT.json")
-        with open(manifest_path) as f:
-            manifest = json.load(f)
+            _append_postings(TRIGRAM_INDEX, _part_postings(fresh), data_dir)
+        manifest = _read_manifest(data_dir)
         manifest[TRIGRAM_INDEX]["rows"] = spark.read.parquet(path).count()
-        _write_manifest(manifest_path, manifest)
+        _write_manifest(os.path.join(data_dir, "_SNAPSHOT.json"), manifest)
     return {"parts_appended": n_new}
+
+
+def _parquet_files(path: str) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
+
+
+def _verified_swap(spark: SparkSession, path: str, listed: list[str], rewrite, swap_lock, what: str) -> dict:
+    """``rewrite(src, tmp)`` the ``listed`` files of ``path`` into its
+    ``.compacting`` sibling and swap it in ONLY after the re-read digest
+    (rows + order-insensitive content hash, the A9/compact_dataset
+    discipline) proves the rewrite lost nothing — a failed rewrite never
+    replaces a good copy. The swap runs under ``swap_lock``: files
+    appended since the listing are copied into the new layout verbatim
+    (appended files are self-contained sorted parquet, so copying them IS
+    an append; Spark part files carry unique UUID names, so no
+    collision), then two renames (live → .precompact, .compacting → live)
+    and the .precompact rmtree. The renames are NOT atomic as a unit;
+    `heal_interrupted_compaction` rolls a crash between them back."""
+    import shutil
+
+    # direct reads (not read_table): they check a write, so they list afresh
+    src = spark.read.parquet(*listed)
+    expected = _table_digest(src)
+    tmp = path.rstrip("/") + ".compacting"
+    rewrite(src, tmp)
+    actual = _table_digest(spark.read.parquet(tmp))
+    if actual != expected:
+        shutil.rmtree(tmp)
+        raise RuntimeError(f"{what}: wrote {expected}, read back {actual}")
+    with swap_lock():
+        delta = sorted(set(_parquet_files(path)) - set(listed))
+        for f in delta:
+            shutil.copy2(f, os.path.join(tmp, os.path.basename(f)))
+        old = path.rstrip("/") + ".precompact"
+        os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old)
+    return {
+        "files_before": len(listed),
+        "files_after": len(_parquet_files(path)),
+        "delta_carried": len(delta),
+        "rows": expected[0],
+    }
 
 
 def compact_index(
     spark: SparkSession,
     data_dir: str,
     index_name: str,
-    key_col: str,
     n_files: int = 8,
 ) -> dict:
     """Restore an append-maintained serving index to fully-sorted layout —
@@ -734,27 +751,25 @@ def compact_index(
     batch lands as its own small term-sorted files; probes stay correct
     (footer stats prune per file) but file count and per-term file touches
     grow with every batch. This rewrites the whole index as ``n_files``
-    range-partitioned, key-sorted files — one contiguous key range per
-    file, the original build's layout — and swaps it in ONLY after the
-    re-read digest (rows + order-insensitive content hash, the
-    A9/compact_dataset discipline) proves the rewrite lost nothing; a
-    failed compaction can never replace a good index. Works for both the
-    full-text (key ``tok``) and trigram (key ``trgm``) indexes.
+    files range-partitioned and sorted on the index's term key (``tok``
+    for the full-text index, ``trgm`` for the trigram index) — one
+    contiguous key range per file, the original build's layout — through
+    the digest-verified swap (`_verified_swap`). The fulltext doc ledger
+    takes the same verified swap; the probe-stat ledgers are rebuilt from
+    the compacted postings (`_rebuild_ledgers`).
 
     CONCURRENCY: safe to run alongside the appenders/maintenance streams
     (the documented cron pairing). The rewrite reads an explicit
     point-in-time file listing and runs UNLOCKED; the swap then holds the
     index lock, re-diffs the listing, and carries any file appended during
-    the rewrite into the new directory verbatim (appended files are
-    self-contained key-sorted parquet — copying them IS an append), so a
-    concurrent batch can never be lost. The two renames of the swap are
-    NOT atomic as a unit — a crash between them leaves no live directory
-    — but `heal_interrupted_compaction` (run here first, and at server
-    startup) rolls that window back, and the lock keeps appenders out of
-    it."""
-    import glob
-    import shutil
-
+    the rewrite into the new directory verbatim, so a concurrent batch can
+    never be lost. A crash between the swap's two renames leaves no live
+    directory — but `heal_interrupted_compaction` (run here first, and at
+    server startup) rolls that window back, and the lock keeps appenders
+    out of it."""
+    if index_name not in _TERM_KEY:
+        raise ValueError(f"no compaction for {index_name}; indexes: {sorted(_TERM_KEY)}")
+    key = _TERM_KEY[index_name]
     path = table_path(data_dir, index_name)
     # COMPACTION flock (distinct from the appender lock), held across the
     # whole rewrite+verify+swap: two compactions of one index share the
@@ -776,151 +791,41 @@ def compact_index(
             heal_interrupted_compaction(path, clean_tmp=True)
             # point-in-time listing: the rewrite covers exactly these files,
             # whatever lands afterwards is handled by the swap-time re-diff
-            listed = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        # direct read (not read_table): it checks a write, so it lists afresh
-        src = spark.read.parquet(*listed)
-        expected = _table_digest(src)
-
-        tmp = path.rstrip("/") + ".compacting"
-        (
-            src.repartitionByRange(n_files, key_col)
-            .sortWithinPartitions(key_col)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        actual = _table_digest(spark.read.parquet(tmp))
-        if actual != expected:
-            shutil.rmtree(tmp)
-            raise RuntimeError(
-                f"index compaction dropped data for {index_name}: "
-                f"wrote {expected}, read back {actual}"
-            )
-        # patient timeout: the rewrite is already done and digest-verified,
+            listed = _parquet_files(path)
+        # patient swap timeout: the rewrite is already done and verified,
         # so waiting out a long-running append (which holds the lock across
         # its Spark jobs) is strictly better than discarding the rewrite
-        with _index_lock(path, timeout=600.0):
-            # files appended while the rewrite ran: verbatim-copy into the
-            # new layout (byte-identical ⇒ lossless by construction; Spark
-            # part files carry unique UUID names, so no collision)
-            delta = sorted(set(glob.glob(os.path.join(path, "*.parquet"))) - set(listed))
-            for f in delta:
-                shutil.copy2(f, os.path.join(tmp, os.path.basename(f)))
-            old = path.rstrip("/") + ".precompact"
-            os.rename(path, old)
-            os.rename(tmp, path)
-            shutil.rmtree(old)
-        out = {
-            "files_before": len(listed),
-            "files_after": len(glob.glob(os.path.join(path, "*.parquet"))),
-            "delta_carried": len(delta),
-            "rows": expected[0],
-            "ok": True,
-        }
-        if index_name == TRIGRAM_INDEX:
-            # the probe-stat ledgers grow one tiny file per append and are
-            # fully derivable from the postings — rebuild them from the
-            # compacted index (fold + heal + migration in one move); under
-            # the index lock so a concurrent append can't interleave
-            with _index_lock(path, timeout=600.0):
-                out["ledgers"] = _rebuild_trigram_stats(spark, data_dir)
-        if index_name == FULLTEXT_INDEX:
-            # the doc ledger grows one file per append too; same
-            # digest-verified rewrite+swap, under the index lock (the
-            # ledger is docs-scale — orders smaller than the postings
-            # rewrite above — so holding the lock through it is cheap
-            # relative to the compaction itself). Unlike the probe-stat
-            # ledgers this one is a MEMBERSHIP AUTHORITY (token-less docs
-            # live only here), hence the full digest/swap/heal discipline
-            # rather than a lossy-tolerant overwrite.
-            with _index_lock(path, timeout=600.0):
-                out["ledger"] = _compact_fulltext_ledger(spark, data_dir, n_files)
-                # the probe-stat ledger is fully derivable from the postings,
-                # so compaction REBUILDS it from the compacted index — the
-                # fold and the heal in one move (crash-inflated df/max_tf
-                # from append windows converge back to exact counts here)
-                out["stats"] = _rebuild_fulltext_stats(spark, data_dir)
-    return out
-
-
-def _compact_fulltext_ledger(spark: SparkSession, data_dir: str, n_files: int) -> dict:
-    """Digest-verified rewrite of the fulltext doc ledger (caller holds the
-    index lock and the compaction flock). Crash between the swap's two
-    renames strands the ledger in `.precompact`; appenders and make_server
-    heal it exactly like the index (they must — a missing ledger would
-    otherwise trigger the postings backfill, which cannot represent
-    token-less documents)."""
-    import glob
-    import shutil
-
-    ledger_path = table_path(data_dir, FULLTEXT_DOCS)
-    heal_interrupted_compaction(ledger_path, clean_tmp=True)
-    if not os.path.isdir(ledger_path):
-        return {"ledger": "absent"}
-    files_before = len(glob.glob(os.path.join(ledger_path, "*.parquet")))
-    # direct read (not read_table): it checks a write, so it lists afresh
-    src = spark.read.parquet(ledger_path)
-    expected = _table_digest(src)
-    tmp = ledger_path.rstrip("/") + ".compacting"
-    src.repartition(max(1, n_files // 4)).write.mode("overwrite").parquet(tmp)
-    actual = _table_digest(spark.read.parquet(tmp))
-    if actual != expected:
-        shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"ledger compaction dropped data: wrote {expected}, read back {actual}"
+        out = _verified_swap(
+            spark, path, listed, lambda src, tmp: _write_sorted(src, tmp, (key,), n_files, "overwrite"),
+            lambda: _index_lock(path, timeout=600.0), f"index compaction dropped data for {index_name}",
         )
-    old = ledger_path.rstrip("/") + ".precompact"
-    os.rename(ledger_path, old)
-    os.rename(tmp, ledger_path)
-    shutil.rmtree(old)
-    return {
-        "files_before": files_before,
-        "files_after": len(glob.glob(os.path.join(ledger_path, "*.parquet"))),
-        "rows": expected[0],
-    }
-
-
-def _write_fulltext_stats(
-    spark: SparkSession, postings: DataFrame, data_dir: str, mode: str
-) -> None:
-    """(tok, df_inc, max_tf) probe-stat ledger rows for a postings batch
-    (see FULLTEXT_STATS). df is the SUM of a token's rows, max_tf the MAX —
-    both merge-monotone, so append-only maintenance is exact modulo the
-    crash-inflation the probe's bound tolerates."""
-    stats = postings.groupBy("tok").agg(
-        F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
-    )
-    stats.coalesce(1).write.mode(mode).parquet(table_path(data_dir, FULLTEXT_STATS))
-
-
-def _rebuild_fulltext_stats(spark: SparkSession, data_dir: str) -> dict:
-    """Compaction-time wholesale rebuild of the fulltext probe-stat ledger
-    from the (just-compacted) postings index — every value in the ledger is
-    derivable from the postings, so rebuilding is both the fold AND the
-    heal: torn, absent, and crash-inflated states all converge to exact
-    counts here. Caller holds the index lock (no concurrent appender can
-    write ledger rows that the swap below would drop). Unlike the trigram
-    fold this aggregates Spark-side: the token vocabulary is corpus-sized,
-    not alphabet-bounded, so a driver collect would not scale. The swap is
-    rmtree + rename; a crash between them leaves the ledger ABSENT, which
-    the probe treats as decline and the next compaction rebuilds — and
-    appenders skip stats maintenance while it is absent, so a readable
-    ledger can never silently miss a batch (the soundness invariant:
-    ledger max_tf ≥ every indexed tf)."""
-    import shutil
-
-    stats_path = table_path(data_dir, FULLTEXT_STATS)
-    idx_path = table_path(data_dir, FULLTEXT_INDEX)
-    tmp = stats_path.rstrip("/") + ".rebuilding"
-    # direct read (not read_table): it checks a write, so it lists afresh
-    stats = spark.read.parquet(idx_path).groupBy("tok").agg(
-        F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    if os.path.exists(stats_path):
-        shutil.rmtree(stats_path)
-    os.rename(tmp, stats_path)
-    return {"rows": n}
+        out["ok"] = True
+        # the ledgers grow one tiny file per append; under the index lock
+        # so a concurrent append can't interleave
+        with _index_lock(path, timeout=600.0):
+            if index_name == FULLTEXT_INDEX:
+                # the doc ledger is a MEMBERSHIP AUTHORITY (token-less docs
+                # live only here), hence the verified swap and heal rather
+                # than a rebuild; it is docs-scale, so holding the lock
+                # through it is cheap. A crash between its renames strands
+                # it in `.precompact`; appenders and make_server heal it
+                # like the index (they must — a missing ledger would
+                # trigger the postings backfill, which cannot represent
+                # token-less documents).
+                ledger = table_path(data_dir, FULLTEXT_DOCS)
+                heal_interrupted_compaction(ledger, clean_tmp=True)
+                out["ledger"] = {"ledger": "absent"}
+                if os.path.isdir(ledger):
+                    n_ledger_files = max(1, n_files // 4)
+                    out["ledger"] = _verified_swap(
+                        spark, ledger, _parquet_files(ledger),
+                        lambda src, tmp: src.repartition(n_ledger_files).write.mode("overwrite").parquet(tmp),
+                        contextlib.nullcontext, "ledger compaction dropped data",
+                    )
+                out["stats"] = {"rows": _rebuild_ledgers(spark, data_dir, index_name)[FULLTEXT_STATS]}
+            else:
+                out["ledgers"] = _rebuild_ledgers(spark, data_dir, index_name)
+    return out
 
 
 def fulltext_rank_maxdf(
@@ -976,12 +881,9 @@ def fulltext_rank_maxdf(
     terms = list(dict.fromkeys(terms))  # set semantics, like isin() downstream
     if not terms:
         raise ValueError("query yields no terms")
-    stats_path = table_path(data_dir, FULLTEXT_STATS)
-    if not os.path.isdir(stats_path):
-        info["reason"] = "no stats ledger"
-        return None, info
-    try:
-        stat = {
+
+    def ledger() -> dict:
+        return {
             r["tok"]: (int(r["df"]), int(r["mtf"]))
             for r in read_table(spark, data_dir, FULLTEXT_STATS)
             .filter(F.col("tok").isin(*terms))
@@ -989,31 +891,15 @@ def fulltext_rank_maxdf(
             .agg(F.sum("df_inc").alias("df"), F.max("max_tf").alias("mtf"))
             .collect()
         }
-    except Exception as exc:  # noqa: BLE001 — optional perf structure: a
-        # torn state (crash mid-rebuild) must degrade to the plain probe
-        info["reason"] = f"unreadable stats ledger: {exc}"
+
+    stat = _read_ledgers(data_dir, (FULLTEXT_STATS,), ledger, info)
+    if stat is None:
         return None, info
-    hot = sorted(t for t in terms if stat.get(t, (0, 0))[0] > max_df * n_docs)
-    rare = sorted(t for t in terms if t not in set(hot))
-    info.update({"hot": hot, "n_docs": n_docs})
-    if not hot:
-        info["reason"] = "no hot terms"
+    info["n_docs"] = n_docs
+    split = _hot_rare(info, "term", terms, {t: v[0] for t, v in stat.items()}, max_df * n_docs)
+    if split is None:
         return None, info
-    if not rare:
-        info["reason"] = "every query term is hot"
-        return None, info
-    cand_ub = sum(stat.get(t, (0, 0))[0] for t in rare)
-    if cand_ub == 0:
-        # ledger df only ever over-counts (stats precede every postings
-        # append), so ledger-df 0 PROVES no rare posting exists — the
-        # candidate set would be empty and the guard would decline anyway;
-        # deciding it here costs zero Spark jobs on this common path (a
-        # query term that simply isn't in the corpus)
-        info["reason"] = "no rare term has any ledger postings"
-        return None, info
-    if cand_ub > MAXDF_BROADCAST_CAP:
-        info["reason"] = f"candidate bound {cand_ub} > broadcast cap {MAXDF_BROADCAST_CAP}"
-        return None, info
+    hot, rare = split
 
     idx = read_table(spark, data_dir, FULLTEXT_INDEX)
     # exact per-term df from the postings — the same counts the plain index
@@ -1040,51 +926,125 @@ def fulltext_rank_maxdf(
     # rare+hot sum carries the same decimal-38 overflow envelope (ANSI
     # error, never silent wrap) as the plain plan's single sum
     idf_map = F.create_map(*[F.lit(x) for t, v in sorted(idf.items()) for x in (t, str(v))])
-    contrib = F.sum(
-        F.col("tf").cast("decimal(38,0)")
-        * F.element_at(idf_map, F.col("tok")).cast("decimal(38,0)")
-    )
-    # the candidate aggregate feeds BOTH the broadcast key set and the
-    # final join, so Spark computes the rare subtree twice — DELIBERATELY
-    # left unpersisted: the subtree is two map-side scans of ledger-capped
-    # posting runs (tiny by construction — the broadcast cap bounds it),
-    # while persisting it MEASURED 2× slower end-to-end on the 1M-doc demo
-    # corpus (cache materialization defeats column pruning into the
-    # broadcast branch, which only needs doc_id, and pins the pre-AQE
-    # shuffle layout; spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-    # is false by default)
-    cand = (
-        idx.filter(F.col("tok").isin(*rare))
-        .groupBy("doc_id")
-        .agg(contrib.alias("r_score"), F.count("*").alias("r_hits"))
-    )
-    hot_hits = (
-        idx.filter(F.col("tok").isin(*hot))
-        .join(F.broadcast(cand.select("doc_id")), "doc_id")
-        .groupBy("doc_id")
-        .agg(contrib.alias("h_score"), F.count("*").alias("h_hits"))
+    weight = F.col("tf").cast("decimal(38,0)") * F.element_at(idf_map, F.col("tok")).cast(
+        "decimal(38,0)"
     )
     zero = F.lit(0).cast("decimal(38,0)")
+    score = (F.col("r_score") + F.coalesce(F.col("h_score"), zero)).cast("long")
+    return _rare_first_topk(
+        idx, "tok", ["doc_id"], rare, hot, weight,
+        lambda hits: [hits.cast("int").alias("n_terms_hit"), score.alias("score_micro")],
+        ("score_micro", "score"), topk, bound, info,
+    )
+
+
+def _read_ledgers(data_dir: str, names: tuple[str, ...], read, info: dict):
+    """The max-df probes' ledger read: ``read()``'s value, or None with the
+    decline reason in ``info`` when a ledger is absent or unreadable. The
+    ledgers are an OPTIONAL perf structure: a torn or empty state (a crash
+    mid-rebuild) must degrade to the plain probe, never 500."""
+    plural = "s" if len(names) > 1 else ""
+    if not all(os.path.isdir(table_path(data_dir, n)) for n in names):
+        info["reason"] = f"no stats ledger{plural}"
+        return None
+    try:
+        return read()
+    except Exception as exc:  # noqa: BLE001 — see the docstring
+        info["reason"] = f"unreadable stats ledger{plural}: {exc}"
+        return None
+
+
+def _hot_rare(info: dict, noun: str, terms: list[str], df: dict, threshold: float, bound_of=None):
+    """The max-df probes' one hot/rare split: a query term is HOT when its
+    ledger df exceeds ``threshold``. Returns (hot, rare), or None with the
+    decline reason in ``info`` — in this order: no hot term, no rare term,
+    no rare ledger posting, candidate bound over MAXDF_BROADCAST_CAP.
+    ``bound_of(hot)``, when given, is a bound known from the ledgers alone
+    and is recorded before the candidate checks."""
+    hot = sorted(t for t in terms if df.get(t, 0) > threshold)
+    rare = sorted(t for t in terms if t not in set(hot))
+    info["hot"] = hot
+    if not hot:
+        info["reason"] = f"no hot {noun}s"
+        return None
+    if not rare:
+        info["reason"] = f"every query {noun} is hot"
+        return None
+    if bound_of is not None:
+        info["bound"] = bound_of(hot)
+    # scale bound on the forced broadcast of the rare candidates: at most
+    # Σ df(rare) keys (each rare posting contributes one candidate at
+    # most), known driver-side from the ledger for free — decline rather
+    # than broadcast an unbounded set when the "rare" terms are merely
+    # less-common (a 100 TB corpus where every query term has millions of
+    # postings should take the plain shuffle plan, which is built for it)
+    cand_ub = sum(df.get(t, 0) for t in rare)
+    if cand_ub == 0:
+        # ledger df only ever over-counts (stats precede every postings
+        # append), so ledger-df 0 PROVES no rare posting exists — the
+        # candidate set would be empty and the guard would decline anyway;
+        # deciding it here costs zero Spark jobs on this common path (a
+        # query term that simply isn't in the corpus)
+        info["reason"] = f"no rare {noun} has any ledger postings"
+        return None
+    if cand_ub > MAXDF_BROADCAST_CAP:
+        info["reason"] = f"candidate bound {cand_ub} > broadcast cap {MAXDF_BROADCAST_CAP}"
+        return None
+    return hot, rare
+
+
+def _rare_first_topk(idx, term, group, rare, hot, weight, score_cols, score, topk, bound, info):
+    """The max-df probes' candidate plan and guard. Candidates come from the
+    ``rare`` terms' postings, grouped by ``group`` (its first column is the
+    candidate key); the ``hot`` terms' postings are semi-joined (broadcast)
+    against that candidate set BEFORE any shuffle, so the exchanges carry
+    O(|rare candidates|) rows however common the hot terms are; the hot
+    posting run is still scanned once map-side (sorted layout, contiguous
+    row groups) — the linear floor any exact answer pays. Each side counts
+    its matches (``r_hits``/``h_hits``) and, given a ``weight``, sums it
+    (``r_score``/``h_score``); ``score_cols(hits)`` maps that to the
+    output columns after the key. The top-k by ``score`` (desc, key asc)
+    is served ONLY when it has a full ``topk`` rows and the k-th score is
+    STRICTLY greater than ``bound`` — every unseen candidate then ranks
+    strictly below all served rows. ``score`` is (column, label for the
+    decline reason).
+
+    The candidate aggregate feeds BOTH the broadcast key set and the final
+    join, so Spark computes the rare subtree twice — DELIBERATELY left
+    unpersisted: the subtree is two map-side scans of ledger-capped
+    posting runs (tiny by construction — the broadcast cap bounds it),
+    while persisting it MEASURED 2× slower end-to-end on the 1M-doc demo
+    corpus (cache materialization defeats column pruning into the
+    broadcast branch, which only needs the key, and pins the pre-AQE
+    shuffle layout; spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+    is false by default)."""
+    key = group[0]
+    col, label = score
+
+    def hits(frame: DataFrame, keys: list[str], side: str) -> DataFrame:
+        aggs = [F.count("*").alias(f"{side}_hits")]
+        if weight is not None:
+            aggs.append(F.sum(weight).alias(f"{side}_score"))
+        return frame.groupBy(*keys).agg(*aggs)
+
+    cand = hits(idx.filter(F.col(term).isin(*rare)), group, "r")
+    hot_hits = hits(
+        idx.filter(F.col(term).isin(*hot)).join(F.broadcast(cand.select(key)), key), [key], "h"
+    )
+    n_hits = F.col("r_hits") + F.coalesce(F.col("h_hits"), F.lit(0))
     rows = [
         r.asDict()
-        for r in cand.join(hot_hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            (F.col("r_hits") + F.coalesce(F.col("h_hits"), F.lit(0)))
-            .cast("int")
-            .alias("n_terms_hit"),
-            (F.col("r_score") + F.coalesce(F.col("h_score"), zero))
-            .cast("long")
-            .alias("score_micro"),
-        )
-        .orderBy(F.desc("score_micro"), F.asc("doc_id"))
+        for r in cand.join(hot_hits, key, "left")
+        .select(key, *score_cols(n_hits))
+        .filter(F.col(col) > 0)
+        .orderBy(F.desc(col), F.asc(key))
         .limit(topk)
         .collect()
     ]
-    if len(rows) < topk or not rows[-1]["score_micro"] > bound:
+    if len(rows) < topk or not rows[-1][col] > bound:
         info["reason"] = (
-            f"guard: {len(rows)} rows, k-th score "
-            f"{rows[-1]['score_micro'] if rows else None} !> bound {bound}"
+            f"guard: {len(rows)} rows, k-th {label} "
+            f"{rows[-1][col] if rows else None} !> bound {bound}"
         )
         return None, info
     info["used"] = True
@@ -1201,18 +1161,13 @@ def trigram_rank_maxdf(
     q = _pg_trigrams([w for w in query.lower().split() if w])
     if not q:
         raise ValueError("query yields no trigrams")
-    stats_path = table_path(data_dir, TRIGRAM_STATS)
-    meta_path = table_path(data_dir, TRIGRAM_META)
-    if not (os.path.isdir(stats_path) and os.path.isdir(meta_path)):
-        info["reason"] = "no stats ledgers"
-        return None, info
-    try:
+
+    def ledgers() -> tuple[int, int, dict]:
         meta = read_table(spark, data_dir, TRIGRAM_META).agg(
             F.sum("n_parts_inc").alias("n_parts"), F.min("min_n_trgm").alias("min_n")
         ).collect()[0]
         if meta["n_parts"] is None or meta["min_n"] is None:
             raise ValueError("empty meta ledger")
-        n_parts, min_n = int(meta["n_parts"]), int(meta["min_n"])
         dfs = {
             r["trgm"]: int(r["df"])
             for r in read_table(spark, data_dir, TRIGRAM_STATS)
@@ -1221,78 +1176,28 @@ def trigram_rank_maxdf(
             .agg(F.sum("df_inc").alias("df"))
             .collect()
         }
-    except Exception as exc:  # noqa: BLE001 — the ledgers are an OPTIONAL
-        # perf structure: a torn/empty state (e.g. a crash mid ledger
-        # compaction overwrite) must degrade to the plain probe, never 500
-        info["reason"] = f"unreadable stats ledgers: {exc}"
-        return None, info
-    hot = sorted(t for t in q if dfs.get(t, 0) > max_df * n_parts)
-    rare = sorted(t for t in q if t not in set(hot))
-    info.update({"hot": hot, "n_parts": n_parts, "min_n_trgm": min_n})
-    if not hot:
-        info["reason"] = "no hot trigrams"
-        return None, info
-    if not rare:
-        info["reason"] = "every query trigram is hot"
-        return None, info
-    s = len(hot)
-    bound = _ceil_6dp(s, min_n + len(q) - s)
-    info["bound"] = bound
-    # scale bound on the forced broadcast below: the candidate set is at
-    # most Σ df(rare) keys (each rare posting contributes one candidate at
-    # most), known driver-side from the ledger for free — decline rather
-    # than broadcast an unbounded set when the "rare" trigrams are merely
-    # less-common (a 100 TB corpus where every query trigram has millions
-    # of postings should take the plain shuffle plan, which is built for
-    # exactly that).
-    cand_ub = sum(dfs.get(t, 0) for t in rare)
-    if cand_ub == 0:
-        # ledger df only ever over-counts, so 0 proves no rare posting
-        # exists — decline without spending a single Spark job
-        info["reason"] = "no rare trigram has any ledger postings"
-        return None, info
-    if cand_ub > MAXDF_BROADCAST_CAP:
-        info["reason"] = f"candidate bound {cand_ub} > broadcast cap {MAXDF_BROADCAST_CAP}"
-        return None, info
+        return int(meta["n_parts"]), int(meta["min_n"]), dfs
 
-    idx = read_table(spark, data_dir, TRIGRAM_INDEX)
-    # computed twice (broadcast keys + final join), deliberately
-    # unpersisted — see fulltext_rank_maxdf: the rare subtree is
-    # ledger-capped and map-side cheap; persisting it measured 2× slower
-    cand = (
-        idx.filter(F.col("trgm").isin(*rare))
-        .groupBy("p_partkey", "p_name", "n_trgm")
-        .agg(F.count("*").alias("r"))
-    )
-    hot_hits = (
-        idx.filter(F.col("trgm").isin(*hot))
-        .join(F.broadcast(cand.select("p_partkey")), "p_partkey")
-        .groupBy("p_partkey")
-        .agg(F.count("*").alias("h"))
-    )
-    inter = F.col("r") + F.coalesce(F.col("h"), F.lit(0))
-    union = F.col("n_trgm") + F.lit(len(q)) - inter
-    rows = [
-        r.asDict()
-        for r in cand.join(hot_hits, "p_partkey", "left")
-        .select(
-            "p_partkey",
-            "p_name",
-            F.round(inter.cast("double") / union, 6).alias("sim"),
-        )
-        .filter(F.col("sim") > 0)
-        .orderBy(F.desc("sim"), F.asc("p_partkey"))
-        .limit(topk)
-        .collect()
-    ]
-    if len(rows) < topk or not rows[-1]["sim"] > bound:
-        info["reason"] = (
-            f"guard: {len(rows)} rows, k-th sim "
-            f"{rows[-1]['sim'] if rows else None} !> bound {bound}"
-        )
+    got = _read_ledgers(data_dir, (TRIGRAM_STATS, TRIGRAM_META), ledgers, info)
+    if got is None:
         return None, info
-    info["used"] = True
-    return rows, info
+    n_parts, min_n, dfs = got
+    info.update({"n_parts": n_parts, "min_n_trgm": min_n})
+    split = _hot_rare(
+        info, "trigram", q, dfs, max_df * n_parts, lambda hot: _ceil_6dp(len(hot), min_n + len(q) - len(hot))
+    )
+    if split is None:
+        return None, info
+    hot, rare = split
+    idx = read_table(spark, data_dir, TRIGRAM_INDEX)
+
+    def sim(hits):
+        return F.round(hits.cast("double") / (F.col("n_trgm") + F.lit(len(q)) - hits), 6)
+
+    return _rare_first_topk(
+        idx, "trgm", ["p_partkey", "p_name", "n_trgm"], rare, hot, None,
+        lambda hits: ["p_name", sim(hits).alias("sim")], ("sim", "sim"), topk, info["bound"], info,
+    )
 
 
 def fulltext_rank_from_index(
@@ -1400,7 +1305,7 @@ def snapshot_tables(
         manifest[name] = {"rows": expected[0], "content_hash": expected[1]}
     if "documents" in manifest:
         manifest[FULLTEXT_INDEX] = build_fulltext_index(spark, sf_dir, out_dir)
-        manifest[FULLTEXT_SHARDED] = build_fulltext_index_sharded(spark, sf_dir, out_dir)
+        manifest[FULLTEXT_SHARDED] = build_fulltext_index_sharded(spark, out_dir)
     if "part" in manifest:
         manifest[TRIGRAM_INDEX] = {"rows": build_trigram_index(spark, sf_dir, out_dir)}
     _write_manifest(os.path.join(out_dir, "_SNAPSHOT.json"), manifest)
@@ -1514,6 +1419,17 @@ class _Handler(BaseHTTPRequestHandler):
                     heal_interrupted_compaction(p)
         return os.path.isdir(p)
 
+    def _ranked(self, index: str, scan_asked: bool, skip, probe, scan) -> dict:
+        """The ranked routes' one sequence: the max-df ``skip`` (exact by its
+        guard, or it declines; None = disabled), then the ``probe`` of the
+        published ``index``, then the corpus ``scan`` — which answers alone
+        when the index is absent or the client asked for it (?scan=, the
+        plans proven row-identical in tests)."""
+        if scan_asked or not self._live_index(index):
+            return _rows_payload(scan())
+        rows = skip()[0] if skip is not None else None
+        return _rows_payload(probe()) if rows is None else {"n": len(rows), "rows": rows}
+
     def _send(self, code: int, payload: dict) -> None:
         body = json.dumps(payload, default=str).encode()
         self.send_response(code)
@@ -1580,57 +1496,44 @@ class _Handler(BaseHTTPRequestHandler):
             # snapshot layout (0 forces the plain probe, (0,1] sets the
             # hot-term threshold)
             max_df = _maxdf_param(q)
-            # ?shard=1 answers from the sharded posting segments (r12 —
-            # proven row-identical to the flat probe); absent sharded
-            # snapshot is a client error, not a silent fallback
+            # the manifest is parsed at most once per request, and only once
+            # an index answers
+            n_docs = functools.cache(lambda: _read_manifest(d)[FULLTEXT_INDEX]["n_docs"])
             if q.get("shard") == "1":
-                if not self._live_index(FULLTEXT_SHARDED):
+                # ?shard=1 answers from the sharded posting segments (proven
+                # row-identical to the flat probe); a snapshot without them
+                # is a client error, not a silent fallback
+                def no_segments():
                     raise ValueError("snapshot has no sharded fulltext index")
-                with open(os.path.join(d, "_SNAPSHOT.json")) as f:
-                    n_docs = json.load(f)[FULLTEXT_INDEX]["n_docs"]
-                self._send(
-                    200, _rows_payload(fulltext_rank_from_sharded(spark, d, terms, k, n_docs))
+
+                out = self._ranked(
+                    FULLTEXT_SHARDED, scan_asked=False, skip=None,
+                    probe=lambda: fulltext_rank_from_sharded(spark, d, terms, k, n_docs()),
+                    scan=no_segments,
                 )
-                return
-            # serve from the published index (term-pruned probe) when the
-            # snapshot has one; ?scan=1 forces the corpus-scan plan (the
-            # two are proven row-identical in tests)
-            if "scan" not in q and self._live_index(FULLTEXT_INDEX):
-                with open(os.path.join(d, "_SNAPSHOT.json")) as f:
-                    n_docs = json.load(f)[FULLTEXT_INDEX]["n_docs"]
-                # max-df skip first (exact by its guard, or declines)
-                rows = None
-                if max_df > 0:
-                    rows, _info = fulltext_rank_maxdf(
-                        spark, d, terms, k, n_docs, max_df=max_df
-                    )
-                if rows is not None:
-                    out = {"n": len(rows), "rows": rows}
-                else:
-                    out = _rows_payload(fulltext_rank_from_index(spark, d, terms, k, n_docs))
             else:
-                out = _rows_payload(api_plans.api_fulltext_rank(spark, d, terms=terms, topk=k))
+                out = self._ranked(
+                    FULLTEXT_INDEX, scan_asked="scan" in q,
+                    skip=(lambda: fulltext_rank_maxdf(spark, d, terms, k, n_docs(), max_df=max_df))
+                    if max_df else None,
+                    probe=lambda: fulltext_rank_from_index(spark, d, terms, k, n_docs()),
+                    scan=lambda: api_plans.api_fulltext_rank(spark, d, terms=terms, topk=k),
+                )
             self._send(200, out)
         elif path == "/fuzzy":
             k = min(_int_param(q, "k", api_plans.TRGM_TOPK), MAX_PAGE_SIZE)
             if not [w for w in q["q"].lower().split() if w]:
                 raise ValueError("q must contain at least one word")
             max_df = _maxdf_param(q)  # up front: malformed values 400
-            if "scan" not in q and self._live_index(TRIGRAM_INDEX):
-                # max-df skip first (exact by its guard, or declines)
-                rows = None
-                if max_df > 0:
-                    rows, _info = trigram_rank_maxdf(spark, d, q["q"], k, max_df=max_df)
-                if rows is not None:
-                    out = {"n": len(rows), "rows": rows}
-                else:
-                    out = _rows_payload(trigram_rank_from_index(spark, d, q["q"], k))
-            else:
-                out = _rows_payload(api_plans.api_search_trigram(spark, d, query=q["q"], topk=k))
+            out = self._ranked(
+                TRIGRAM_INDEX, scan_asked="scan" in q,
+                skip=(lambda: trigram_rank_maxdf(spark, d, q["q"], k, max_df=max_df)) if max_df else None,
+                probe=lambda: trigram_rank_from_index(spark, d, q["q"], k),
+                scan=lambda: api_plans.api_search_trigram(spark, d, query=q["q"], topk=k),
+            )
             self._send(200, out)
         elif path == "/health":
-            with open(os.path.join(d, "_SNAPSHOT.json")) as f:
-                self._send(200, {"ok": True, "snapshot": json.load(f)})
+            self._send(200, {"ok": True, "snapshot": _read_manifest(d)})
         else:
             self._send(404, {"error": f"no route {path}"})
 
@@ -1642,8 +1545,8 @@ def make_server(spark: SparkSession, data_dir: str, port: int = 0) -> ThreadingH
     index directory with the data stranded in ``.precompact``) so probes
     never 500 against a half-swapped index."""
     # each healed path is guarded by the lock its SWAPPER holds: the doc
-    # ledger is swapped by _compact_fulltext_ledger under the fulltext
-    # INDEX lock, so healing it under a fulltext_docs lock of its own
+    # ledger is swapped by compact_index under the fulltext INDEX lock,
+    # so healing it under a fulltext_docs lock of its own
     # would let this startup heal roll back a LIVE ledger compaction
     # between its two renames (the live compactor holds only the index
     # lock, which a ledger-path lock would not contend with)

@@ -4,16 +4,19 @@ The operational counterpart of scripts/serve.py: the serving indexes are
 append-only (serving/http_api.py), and this CLI runs the three maintenance
 dataflows against a live snapshot directory —
 
-    # append one landed batch of documents (first-wins, ledger-exact)
+    # append one landed batch of documents (first-wins, ledger-exact): its
+    # postings, probe-stat rows, sharded segments and doc-ledger rows
     python scripts/maintain_index.py append --data-dir SNAP --new-docs DIR
 
     # drain a landing directory as a checkpointed stream (resumable)
     python scripts/maintain_index.py stream --data-dir SNAP \
         --landing DIR --checkpoint DIR
 
-    # restore an index to fully-sorted layout (digest-verified swap)
+    # restore an index to fully-sorted layout (digest-verified swap); the
+    # sort key follows from the index: tok (fulltext_index), trgm
+    # (trigram_index)
     python scripts/maintain_index.py compact --data-dir SNAP \
-        [--index fulltext_index --key tok] [--n-files 8]
+        [--index fulltext_index] [--n-files 8]
 
 All three are idempotent: re-delivered batches append nothing, a restarted
 stream resumes after its committed files, and a failed compaction never
@@ -53,8 +56,7 @@ def main() -> int:
 
     c = sub.add_parser("compact", help="restore an index to sorted layout")
     c.add_argument("--data-dir", required=True)
-    c.add_argument("--index", default="fulltext_index")
-    c.add_argument("--key", default="tok")
+    c.add_argument("--index", default="fulltext_index", choices=["fulltext_index", "trigram_index"])
     c.add_argument("--n-files", type=int, default=8)
 
     args = p.parse_args()
@@ -79,9 +81,7 @@ def main() -> int:
             )
         }
     else:
-        out = http_api.compact_index(
-            spark, args.data_dir, args.index, args.key, n_files=args.n_files
-        )
+        out = http_api.compact_index(spark, args.data_dir, args.index, n_files=args.n_files)
     print(json.dumps(out, sort_keys=True))
     return 0
 

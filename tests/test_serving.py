@@ -493,7 +493,7 @@ def test_index_compaction_restores_sorted_layout(spark, tmp_path):
     frag_files = len(glob.glob(os.path.join(idx_path, "*.parquet")))
     assert frag_files > 8  # appends fragmented the build layout
 
-    out = compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"] and out["files_before"] == frag_files and out["files_after"] == 8
     # every file now holds one contiguous key range (fully-sorted layout)
     ranges = []
@@ -654,7 +654,7 @@ def test_failed_index_compaction_never_replaces_the_live_index(spark, tmp_path, 
 
     monkeypatch.setattr(api, "_table_digest", corrupted)
     with pytest.raises(RuntimeError, match="compaction dropped data"):
-        api.compact_index(spark, d, "fulltext_index", "tok")
+        api.compact_index(spark, d, "fulltext_index")
     assert sorted(glob.glob(os.path.join(idx_path, "*.parquet"))) == files_before
     assert not os.path.exists(idx_path + ".compacting")
     assert not os.path.exists(idx_path + ".precompact")
@@ -732,7 +732,7 @@ def test_compact_carries_concurrent_append_into_new_layout(spark, tmp_path, monk
         return real_digest(df)
 
     monkeypatch.setattr(api, "_table_digest", inject_append_on_verify)
-    out = api.compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = api.compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"] and out["delta_carried"] >= 1
     assert len(glob.glob(os.path.join(idx_path, "*.parquet"))) == 8 + out["delta_carried"]
     ids = {
@@ -917,7 +917,7 @@ def test_second_compactor_fails_fast_and_cannot_corrupt(spark, tmp_path):
     with _index_lock(idx_path + ".compact", timeout=0.3):
         t0 = time.monotonic()
         with pytest.raises(TimeoutError, match="live process"):
-            compact_index(spark, d, "fulltext_index", "tok")
+            compact_index(spark, d, "fulltext_index")
         assert time.monotonic() - t0 < 10  # fail-fast, not the 600s queue
         # the loser did NOTHING: live index intact, no tmp rewrite started
         assert spark.read.parquet(idx_path).count() == n_before
@@ -925,7 +925,7 @@ def test_second_compactor_fails_fast_and_cannot_corrupt(spark, tmp_path):
         assert not os.path.exists(idx_path + ".precompact")
 
     # with the first compactor gone, compaction proceeds normally
-    out = compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"]
     assert len(glob.glob(os.path.join(idx_path, "*.parquet"))) == 8
     assert spark.read.parquet(idx_path).count() == n_before
@@ -1028,7 +1028,7 @@ def test_kill9_compactor_mid_swap_appender_wins_and_index_converges(spark, tmp_p
         from australian_company_etl_spark.session import get_spark
         from australian_company_etl_spark.serving.http_api import compact_index
         spark = get_spark(app_name="kill9-compactor")
-        compact_index(spark, d, "fulltext_index", "tok")
+        compact_index(spark, d, "fulltext_index")
         """
     )
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
@@ -1077,7 +1077,7 @@ def test_kill9_compactor_mid_swap_appender_wins_and_index_converges(spark, tmp_p
 
     # a later compaction reclaims the orphaned rewrite and the index
     # converges to exactly base ∪ batch: digest equals a from-scratch build
-    out = compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"]
     got = _table_digest(spark.read.parquet(idx_path))
 
@@ -1394,7 +1394,7 @@ def test_trigram_ledger_compaction_folds_and_preserves_probe(spark, tmp_path):
 
     before = trigram_rank_maxdf(spark, d, TRGM_QUERY, TRGM_TOPK)
 
-    out = compact_index(spark, d, "trigram_index", "trgm", n_files=4)
+    out = compact_index(spark, d, "trigram_index", n_files=4)
     assert out["ok"]
     led = out["ledgers"]
     assert led["trigram_meta"] == 1 and led["trigram_stats"] > 0
@@ -1453,7 +1453,7 @@ def test_fulltext_ledger_compaction_and_midswap_heal(spark, tmp_path):
     assert files_before >= 3  # build + two appends
     n_ledger = spark.read.parquet(ledger_path).count()
 
-    out = compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"]
     assert out["ledger"]["rows"] == n_ledger
     assert out["ledger"]["files_after"] < files_before
@@ -1565,7 +1565,7 @@ def test_fulltext_maxdf_declines_without_stats_ledger(spark, tmp_path):
     rows, info = api.fulltext_rank_maxdf(spark, d, ["golden", "uid17"], 1, 60)
     assert rows is None and info["reason"] == "no stats ledger"
 
-    out = api.compact_index(spark, d, "fulltext_index", "tok", n_files=4)
+    out = api.compact_index(spark, d, "fulltext_index", n_files=4)
     assert out["ok"] and out["stats"]["rows"] > 0
     rows, info = api.fulltext_rank_maxdf(spark, d, ["golden", "uid17"], 1, 60)
     assert info["used"] and rows[0]["doc_id"] == 17
@@ -1644,7 +1644,7 @@ def test_fulltext_maxdf_survives_appends_and_compaction_rebuild(spark, tmp_path)
     ]
     assert before == full
 
-    out = api.compact_index(spark, d, "fulltext_index", "tok", n_files=4)
+    out = api.compact_index(spark, d, "fulltext_index", n_files=4)
     assert out["ok"] and out["stats"]["rows"] == len(truth)
     assert len(glob.glob(os.path.join(stats_path, "*.parquet"))) == 1
     rebuilt = {
@@ -1776,7 +1776,7 @@ def test_trigram_rebuild_heals_corrupted_ledger_and_empty_batches(spark, tmp_pat
     spark.createDataFrame(
         [(60, 999_999)], "n_parts_inc bigint, min_n_trgm bigint"
     ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-    out = api.compact_index(spark, d, "trigram_index", "trgm", n_files=4)
+    out = api.compact_index(spark, d, "trigram_index", n_files=4)
     assert out["ok"] and out["ledgers"]["trigram_meta"] == 1
     postings = spark.read.parquet(table_path(d, api.TRIGRAM_INDEX))
     true_min = (
@@ -1806,7 +1806,7 @@ def test_trigram_bound_rounds_up_like_spark_not_half_even(spark):
 
 def test_make_server_heals_ledger_under_index_lock(spark, tmp_path):
     """The fulltext doc ledger is swapped under the fulltext INDEX lock
-    (_compact_fulltext_ledger); the startup heal must take that same lock
+    (compact_index); the startup heal must take that same lock
     — a ledger-path lock of its own would not contend with a live ledger
     compaction and could roll back its mid-swap state (review finding)."""
     import os
@@ -1890,7 +1890,7 @@ def test_rebuild_crash_leaves_stat_ledgers_absent_not_stale(spark, tmp_path, mon
     def boom(*a, **kw):
         raise RuntimeError("crash before stats write")
 
-    monkeypatch.setattr(api, "_write_trigram_stats", boom)
+    monkeypatch.setattr(api, "_write_ledgers", boom)
     with pytest.raises(RuntimeError):
         api.build_trigram_index(spark, small_dir, d)
     monkeypatch.undo()
@@ -1909,7 +1909,7 @@ def test_rebuild_crash_leaves_stat_ledgers_absent_not_stale(spark, tmp_path, mon
     docs_dir = str(tmp_path / "docs_small")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     docs.filter(F.col("doc_id") <= 5).write.parquet(docs_dir + "/documents.parquet")
-    monkeypatch.setattr(api, "_write_fulltext_stats", boom)
+    monkeypatch.setattr(api, "_write_ledgers", boom)
     with pytest.raises(RuntimeError):
         api.build_fulltext_index(spark, docs_dir, ft)
     monkeypatch.undo()
@@ -1955,7 +1955,7 @@ def test_fulltext_routes_follow_appends_and_compaction(spark, tmp_path):
         )
         _, appended = _get(base, q)
         assert [r["doc_id"] for r in appended["rows"]] == [501, 500]
-        api.compact_index(spark, d, api.FULLTEXT_INDEX, "tok", n_files=2)
+        api.compact_index(spark, d, api.FULLTEXT_INDEX, n_files=2)
         assert _get(base, q) == (200, appended)
         assert _get(base, q + "&maxdf=0") == (200, appended)
     finally:
@@ -1992,7 +1992,7 @@ def test_fuzzy_routes_follow_appends_and_compaction(spark, tmp_path):
         )
         _, appended = _get(base, q)
         assert [(r["p_partkey"], r["sim"]) for r in appended["rows"]] == [(450, 1.0), (500, 1.0)]
-        api.compact_index(spark, d, api.TRIGRAM_INDEX, "trgm", n_files=2)
+        api.compact_index(spark, d, api.TRIGRAM_INDEX, n_files=2)
         assert _get(base, q) == (200, appended)
         assert _get(base, q + "&maxdf=0") == (200, appended)
     finally:

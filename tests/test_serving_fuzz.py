@@ -153,16 +153,40 @@ def _state_digest(spark, d: str) -> dict:
 
 
 def _build_template(spark, tmp_path, n_base: int) -> tuple[str, str]:
-    """A base snapshot (docs 0..n_base) to copy per crash iteration, plus
-    a corpus dir for the from-scratch reference."""
+    """A base snapshot (docs 0..n_base, with sharded segments 5 docs wide,
+    so the batch lands both in an existing shard and in new ones) to copy
+    per crash iteration, plus a corpus dir for the from-scratch
+    reference."""
     corpus = str(tmp_path / "corpus")
     _mk_docs(spark, 0, n_base).write.parquet(corpus + "/documents.parquet")
     template = str(tmp_path / "template")
     os.makedirs(template)
-    meta = api.build_fulltext_index(spark, corpus, template, n_files=2)
+    manifest = {
+        api.FULLTEXT_INDEX: api.build_fulltext_index(spark, corpus, template, n_files=2),
+        api.FULLTEXT_SHARDED: api.build_fulltext_index_sharded(
+            spark, template, shard_docs=5, n_files=2
+        ),
+    }
     with open(os.path.join(template, "_SNAPSHOT.json"), "w") as f:
-        json.dump({"fulltext_index": meta}, f)
+        json.dump(manifest, f)
     return template, corpus
+
+
+def _assert_shard_equals_flat(spark, d: str, where: str) -> None:
+    """The sharded segments hold exactly the flat postings, so the
+    shard=1 ranking equals the flat one."""
+    seg = spark.read.parquet(table_path(d, api.FULLTEXT_SHARDED))
+    exploded = seg.select("tok", F.explode(F.arrays_zip("doc_ids", "tfs")).alias("p")).select(
+        "tok", F.col("p.doc_ids").alias("doc_id"), F.col("p.tfs").alias("tf")
+    )
+    postings = spark.read.parquet(table_path(d, api.FULLTEXT_INDEX))
+    assert api._table_digest(exploded) == api._table_digest(postings), where
+    with open(os.path.join(d, "_SNAPSHOT.json")) as f:
+        n_docs = json.load(f)["fulltext_index"]["n_docs"]
+    for terms in (["hot", "doc13"], ["alpha", "gamma1"]):
+        flat = api.fulltext_rank_from_index(spark, d, terms, 5, n_docs).collect()
+        shd = api.fulltext_rank_from_sharded(spark, d, terms, 5, n_docs).collect()
+        assert [tuple(r) for r in shd] == [tuple(r) for r in flat], (where, terms)
 
 
 def _reference_digest(spark, tmp_path, n_total: int) -> dict:
@@ -185,7 +209,9 @@ def test_appender_crash_at_every_mutation_boundary_heals(
     """Crash the fulltext appender before its k-th snapshot-dir mutation
     for every k; re-deliver the batch (the at-least-once contract), then
     compact. Postings/ledger/stats/n_docs must equal the from-scratch
-    build over the full corpus at EVERY crash point."""
+    build over the full corpus at EVERY crash point, and the sharded
+    segments (written between the postings and the doc ledger) must hold
+    exactly the flat postings, so shard=1 ranks as the flat route does."""
     template, _corpus = _build_template(spark, tmp_path, N_BASE)
     want = _reference_digest(spark, tmp_path, N_TOTAL)
     batch = _mk_docs(spark, N_BASE, N_TOTAL)
@@ -204,16 +230,17 @@ def test_appender_crash_at_every_mutation_boundary_heals(
             injector.disarm()
         # recovery protocol: re-deliver, then compact (rebuilds the stats)
         api.append_documents_to_index(spark, batch, d)
-        api.compact_index(spark, d, api.FULLTEXT_INDEX, "tok", n_files=2)
+        api.compact_index(spark, d, api.FULLTEXT_INDEX, n_files=2)
         got = _state_digest(spark, d)
         assert got == want, f"appender crash point {k} did not converge: {got}"
+        _assert_shard_equals_flat(spark, d, f"appender crash point {k}")
         if not crashed:
             break
         crash_points += 1
         k += 1
     # the enumeration must have exercised real boundaries (stats write,
-    # postings write, ledger append, manifest dump at minimum)
-    assert crash_points >= 3, f"only {crash_points} appender boundaries found"
+    # postings write, segment write, ledger append, manifest dump at minimum)
+    assert crash_points >= 5, f"only {crash_points} appender boundaries found"
 
 
 def test_compactor_crash_at_every_mutation_boundary_heals(
@@ -241,7 +268,7 @@ def test_compactor_crash_at_every_mutation_boundary_heals(
         injector.arm(crash_at=k)
         crashed = False
         try:
-            api.compact_index(spark, d, api.FULLTEXT_INDEX, "tok", n_files=2)
+            api.compact_index(spark, d, api.FULLTEXT_INDEX, n_files=2)
         except SimulatedCrash:
             crashed = True
         finally:
@@ -249,7 +276,7 @@ def test_compactor_crash_at_every_mutation_boundary_heals(
         # recovery: the appender heals interrupted swaps under its lock
         # (re-delivery of the same batch is a no-op append), then compact
         api.append_documents_to_index(spark, batch, d)
-        api.compact_index(spark, d, api.FULLTEXT_INDEX, "tok", n_files=2)
+        api.compact_index(spark, d, api.FULLTEXT_INDEX, n_files=2)
         got = _state_digest(spark, d)
         assert got == want, f"compactor crash point {k} did not converge: {got}"
         if not crashed:
@@ -287,8 +314,8 @@ def test_trigram_compactor_crash_at_every_mutation_boundary_heals(
     spark, tmp_path, injector
 ):
     """The trigram index's compaction rebuilds its TWO probe-stat ledgers
-    via a per-ledger write-tmp + rmtree + rename swap (`_rebuild_trigram_
-    stats`) — a different chain than the fulltext side's digest-verified
+    via a per-ledger write-tmp + rmtree + rename swap (`_rebuild_ledgers`)
+    — a different chain than the fulltext side's digest-verified
     ledger compaction, so it gets its own boundary enumeration. Crash
     before every snapshot-dir mutation; recovery = a no-op re-delivery
     (heals interrupted swaps) + a fresh compaction; postings, both
@@ -315,7 +342,7 @@ def test_trigram_compactor_crash_at_every_mutation_boundary_heals(
         json.dump({"trigram_index": {"rows": n_ref}}, f)
     # reference passes through one compaction so its meta ledger is the
     # same folded single-row shape recovery converges to
-    api.compact_index(spark, ref, api.TRIGRAM_INDEX, "trgm", n_files=2)
+    api.compact_index(spark, ref, api.TRIGRAM_INDEX, n_files=2)
     want = _trigram_state_digest(spark, ref)
 
     k, crash_points = 1, 0
@@ -325,13 +352,13 @@ def test_trigram_compactor_crash_at_every_mutation_boundary_heals(
         injector.arm(crash_at=k)
         crashed = False
         try:
-            api.compact_index(spark, d, api.TRIGRAM_INDEX, "trgm", n_files=2)
+            api.compact_index(spark, d, api.TRIGRAM_INDEX, n_files=2)
         except SimulatedCrash:
             crashed = True
         finally:
             injector.disarm()
         api.append_parts_to_trigram_index(spark, batch, d)
-        api.compact_index(spark, d, api.TRIGRAM_INDEX, "trgm", n_files=2)
+        api.compact_index(spark, d, api.TRIGRAM_INDEX, n_files=2)
         got = _trigram_state_digest(spark, d)
         assert got == want, f"trigram compactor crash point {k} did not converge: {got}"
         if not crashed:
@@ -488,7 +515,7 @@ def test_trigram_appender_crash_at_every_mutation_boundary_heals(
         json.dump({"trigram_index": {"rows": n_ref}}, f)
     # recovery ends in a compaction, so the reference passes through one
     # too — its ledgers take the folded single-row shape recovery reaches
-    api.compact_index(spark, ref, api.TRIGRAM_INDEX, "trgm", n_files=2)
+    api.compact_index(spark, ref, api.TRIGRAM_INDEX, n_files=2)
     want = _trigram_state_digest(spark, ref)
 
     k, crash_points = 1, 0
@@ -504,7 +531,7 @@ def test_trigram_appender_crash_at_every_mutation_boundary_heals(
         finally:
             injector.disarm()
         api.append_parts_to_trigram_index(spark, batch, d)
-        api.compact_index(spark, d, api.TRIGRAM_INDEX, "trgm", n_files=2)
+        api.compact_index(spark, d, api.TRIGRAM_INDEX, n_files=2)
         got = _trigram_state_digest(spark, d)
         assert got == want, f"trigram appender crash point {k} did not converge: {got}"
         if not crashed:
